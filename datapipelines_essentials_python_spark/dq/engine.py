@@ -6,11 +6,17 @@ runs each rule as its own Spark action — Q1 unique (``:50-68``), Q2 not-null
 (``:110-223``) — plus an extra ``df.count()`` (``:127``): N rules ⇒ N+1 full
 scans.
 
-Here all not-null rules and the total count are fused into ONE conditional
-aggregation pass (``F.sum(F.when(pred, 1))`` — the fix SURVEY §2.11 calls
-for), and each unique rule is one groupBy-count action. At 100 TB that turns
-N+1 scans into 1 + #unique_rules (+ user queries, which are arbitrary SQL
-and can't be fused safely).
+Here a whole rule config is ONE query and ONE Spark action. The total count
+and every not-null rule are fused into one conditional aggregation
+(``F.sum(F.when(pred, 1))`` — the fix SURVEY §2.11 calls for); each unique
+rule is a 1-row ``groupBy → count > 1 → agg`` and each query rule a 1-row
+``count`` over the user's SQL; the 1-row aggregates are unioned and read with
+a single ``collect()``. Because they sit in one plan, the subtrees that read
+the input share its exchanges (ReuseExchange), so an expensive input plan — a
+landing batch's scans and joins — is evaluated once per rule config instead
+of once per rule group. A union rather than a cross join of the 1-row
+aggregates: the cross join broadcasts each of them, one extra Spark job per
+unique or query rule.
 """
 
 from __future__ import annotations
@@ -20,7 +26,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datapipelines_essentials_python_spark.dq.rules import DQConfig, Rule, RuleResult
+from datapipelines_essentials_python_spark.dq.rules import DQConfig, RuleResult
 from datapipelines_essentials_python_spark.functions.nulls import is_null_or_blank
 
 
@@ -33,81 +39,67 @@ def _not_null_violation_pred(columns: tuple[str, ...]):
 def execute_rules(
     spark: SparkSession, df: DataFrame, config: DQConfig
 ) -> tuple[bool, list[RuleResult]]:
-    """Run all rules; returns (all_passed, per-rule results)."""
-    results: list[RuleResult] = []
+    """Run all rules as one Spark action; returns (all_passed, one result per
+    configured rule, in config order).
 
-    # ---- fused pass: total count + every not-null rule -------------------
-    not_null_rules = [r for r in config.rules if r.rule_type.lower() == "not null"]
-    aggs = [F.count(F.lit(1)).alias("__total")]
-    for r in not_null_rules:
-        aggs.append(
-            F.sum(F.when(_not_null_violation_pred(r.columns), 1).otherwise(0)).alias(
-                f"__nn_{r.rule_id}"
-            )
-        )
-    fused = df.agg(*aggs).collect()[0]
-    total = int(fused["__total"])
-    for r in not_null_rules:
-        violations = int(fused[f"__nn_{r.rule_id}"] or 0)
-        results.append(
-            RuleResult(
-                rule_id=r.rule_id,
-                name=r.name,
-                rule_type=r.rule_type,
-                passed=violations == 0,
-                violation_count=violations,
-                total_count=total,
-                detail=f"columns={list(r.columns)}",
-            )
-        )
-
-    # ---- unique rules: one aggregated action each ------------------------
-    for r in config.rules:
-        if r.rule_type.lower() != "unique":
-            continue
-        dup_row = (
-            df.groupBy(*r.columns)
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .where(F.col("cnt") > 1)
-            .agg(
-                F.count(F.lit(1)).alias("dup_keys"),
-                F.coalesce(F.sum(F.col("cnt") - 1), F.lit(0)).alias("dup_rows"),
-            )
-            .collect()[0]
-        )
-        violations = int(dup_row["dup_rows"])
-        results.append(
-            RuleResult(
-                rule_id=r.rule_id,
-                name=r.name,
-                rule_type=r.rule_type,
-                passed=violations == 0,
-                violation_count=violations,
-                total_count=total,
-                detail=f"duplicate keys={int(dup_row['dup_keys'])} over columns={list(r.columns)}",
-            )
-        )
-
-    # ---- query rules: arbitrary SQL against view `temp` ------------------
-    query_rules = [r for r in config.rules if r.rule_type.lower() == "query"]
-    if query_rules:
+    Every 1-row aggregate is keyed by rule position, not ``rule_id``, so
+    rules that share an id still get a result each.
+    """
+    kinds = [r.rule_type.strip().lower() for r in config.rules]
+    if "query" in kinds:
         df.createOrReplaceTempView("temp")
-        for r in query_rules:
-            violations = spark.sql(r.query).count()
-            results.append(
-                RuleResult(
-                    rule_id=r.rule_id,
-                    name=r.name,
-                    rule_type=r.rule_type,
-                    passed=violations == 0,
-                    violation_count=violations,
-                    total_count=total,
-                    detail="nonzero rows from rule query = violations",
+
+    # each part is one (key, counts) row; key 0 is the fused aggregate
+    # [total, one count per not-null rule], key i the unique or query rule
+    # at position i (1-based); slots[i - 1] says where rule i's count is
+    fused = [F.count(F.lit(1))]
+    parts, slots = [], []
+    for i, (r, kind) in enumerate(zip(config.rules, kinds), start=1):
+        if kind == "not null":
+            slots.append((0, len(fused)))
+            fused.append(F.sum(F.when(_not_null_violation_pred(r.columns), 1).otherwise(0)))
+            continue
+        if kind == "unique":
+            part = (
+                df.groupBy(*r.columns)
+                .agg(F.count(F.lit(1)).alias("__cnt"))
+                .where(F.col("__cnt") > 1)
+                .agg(
+                    F.lit(i),
+                    F.array(
+                        F.coalesce(F.sum(F.col("__cnt") - 1), F.lit(0)),  # duplicate rows
+                        F.count(F.lit(1)),  # duplicate keys
+                    ),
                 )
             )
+        else:
+            part = spark.sql(r.query).agg(F.lit(i), F.array(F.count(F.lit(1))))
+        parts.append(part)
+        slots.append((i, 0))
+    parts.insert(0, df.agg(F.lit(0), F.array(*fused)))
+    counts = dict(reduce(DataFrame.union, parts).collect())
 
-    ordered = {r.rule_id: next(res for res in results if res.rule_id == r.rule_id) for r in config.rules}
-    results = list(ordered.values())
+    total = counts[0][0]
+    results = []
+    for r, kind, (key, pos) in zip(config.rules, kinds, slots):
+        violations = int(counts[key][pos] or 0)
+        if kind == "not null":
+            detail = f"columns={list(r.columns)}"
+        elif kind == "unique":
+            detail = f"duplicate keys={counts[key][1]} over columns={list(r.columns)}"
+        else:
+            detail = "nonzero rows from rule query = violations"
+        results.append(
+            RuleResult(
+                rule_id=r.rule_id,
+                name=r.name,
+                rule_type=r.rule_type,
+                passed=violations == 0,
+                violation_count=violations,
+                total_count=total,
+                detail=detail,
+            )
+        )
     return all(r.passed for r in results), results
 
 

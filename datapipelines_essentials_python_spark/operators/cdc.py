@@ -14,15 +14,18 @@ builds latest-per-key snapshots with ``row_number() = 1``.
 Fixes over the reference, specced per SURVEY §7.5:
 
 - broken None-guard on the initial load (``change_data_capture.py:53-60``
-  would throw on a None old side) → explicit empty/None contract;
+  would throw on a None old side) → explicit None contract; an empty old
+  side needs no guard (every new row is then unmatched);
 - positional ``union`` → ``unionByName``;
 - global-order dedup without partition keys (W2) funnels everything through
   one partition — allowed here but only via an explicit flag.
 
-Scale design: inserts/updates are ``left_anti`` / inner joins on the pk —
-both shuffle-partitioned on the same key so AQE can co-plan them; the hash
-column is computed once at read time (``io.readers.read_with_audit_columns``)
-so change detection never re-reads payload columns.
+Scale design: inserts and updates come out of ONE ``left`` join on the pks
+(a match marker tells unmatched rows from matched ones), so ``new`` is
+scanned and shuffled once and no Spark action runs until the caller writes
+or counts the result; the hash column is computed once at read time
+(``io.readers.read_with_audit_columns``) so change detection never re-reads
+payload columns.
 """
 
 from __future__ import annotations
@@ -72,39 +75,40 @@ def merge_cdc(
     hash_col: str = "hashcode",
 ) -> DataFrame:
     """Inserts + updates of ``new`` vs ``old`` (parity:
-    change_data_capture.py:45-77).
+    change_data_capture.py:45-77). Lazy: builds the plan, runs no action.
 
-    - ``old`` None/empty → ``new`` unchanged (initial-load shortcut,
-      reference ``:57-60``, with the broken guard fixed);
+    - ``old`` None → ``new.dropDuplicates()`` (initial-load shortcut,
+      reference ``:57-60``, with the broken guard fixed); an empty ``old``
+      gives the same rows through the join;
     - old side is first deduped to latest-per-pk when ``order_cols`` given
       (reference ``:63-66``);
-    - inserts = left_anti on pks; updates = inner join where hashes differ,
-      keeping the new side; result = unionByName + dropDuplicates.
+    - one ``left`` join on the pks keeps the new rows with no match
+      (inserts) and the matched rows whose hashes differ (updates), then
+      ``dropDuplicates``. A matched key whose old hash is NULL is neither:
+      the unmatched test reads the match marker, not the old hash.
     """
-    if old is None or old.isEmpty():
+    if old is None:
         return new.dropDuplicates()
     if order_cols:
         old = snapshot(old, pk_cols, order_cols)
     old_keyed = old.select(
         *[F.col(c).alias(f"__old_{c}") for c in pk_cols],
         F.col(hash_col).alias("__old_hash"),
-    )
-
-    inserts = new.join(
-        old_keyed,
-        [new[c] == old_keyed[f"__old_{c}"] for c in pk_cols],
-        "left_anti",
+        F.lit(True).alias("__old_matched"),
     )
     cond = None
     for c in pk_cols:
         clause = new[c] == old_keyed[f"__old_{c}"]
         cond = clause if cond is None else (cond & clause)
-    updates = (
-        new.join(old_keyed, cond, "inner")
-        .where(new[hash_col] != old_keyed["__old_hash"])
+    return (
+        new.join(old_keyed, cond, "left")
+        .where(
+            old_keyed["__old_matched"].isNull()
+            | (new[hash_col] != old_keyed["__old_hash"])
+        )
         .select(*[new[c] for c in new.columns])
+        .dropDuplicates()
     )
-    return inserts.unionByName(updates).dropDuplicates()
 
 
 def apply_cdc_pipeline(

@@ -1,5 +1,7 @@
 """Hash-diff CDC (SURVEY §2.9) including the reference's broken-guard fixes."""
 
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from datapipelines_essentials_python_spark.operators.cdc import (
@@ -115,3 +117,39 @@ def test_changed_columns_null_safe(spark):
     # pk 1: NULL == NULL → unchanged → absent; pk 3 identical → absent
     assert set(out) == {2}
     assert out[2]["changed_cols"] == "s,v" and out[2]["n_changed"] == 2
+
+
+def test_matched_key_with_null_history_hash_is_no_change(spark):
+    old = spark.createDataFrame([(1, None)], "id int, hashcode string")
+    new = spark.createDataFrame([(1, "h1")], "id int, hashcode string")
+    # matched on the key, hashes not comparable → neither insert nor update
+    assert merge_cdc(old, new, ["id"]).count() == 0
+
+
+def test_null_pk_in_new_is_insert(spark):
+    old = spark.createDataFrame([(1, "h1")], "id int, hashcode string")
+    new = spark.createDataFrame([(None, "h9"), (1, "h1")], "id int, hashcode string")
+    assert [tuple(r) for r in merge_cdc(old, new, ["id"]).collect()] == [(None, "h9")]
+
+
+def test_duplicate_history_pks_yield_each_changed_row_once(spark):
+    old = spark.createDataFrame(
+        [(1, "h1"), (1, "h2"), (2, "h2"), (2, "h3")], "id int, hashcode string"
+    )
+    new = spark.createDataFrame([(1, "h9"), (2, "h2")], "id int, hashcode string")
+    # id 1 differs from both history rows; id 2 equals one of them and
+    # differs from the other — each changed new row comes back once
+    got = sorted(tuple(r) for r in merge_cdc(old, new, ["id"]).collect())
+    assert got == [(1, "h9"), (2, "h2")]
+
+
+def test_empty_history_returns_new_deduplicated(spark):
+    old = spark.createDataFrame([], "id int, hashcode string")
+    new = spark.createDataFrame(
+        [(1, "h1"), (1, "h1"), (None, "h2")], "id int, hashcode string"
+    )
+    got = merge_cdc(old, new, ["id"], order_cols=["hashcode"])
+    assert Counter(map(tuple, got.collect())) == Counter(
+        map(tuple, new.dropDuplicates().collect())
+    )
+    assert got.count() == 2

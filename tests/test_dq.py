@@ -130,3 +130,34 @@ def test_summary_df(spark, df):
         "rule_id", "name", "rule_type", "passed", "violation_count", "total_count", "detail",
     ]
     assert out.count() == 1
+
+
+def test_rules_sharing_an_id_each_get_a_result(spark, df):
+    config = DQConfig(
+        dq_id="t",
+        rules=[
+            Rule("7", "grp_not_null", "not null", columns=("grp",)),
+            Rule("7", "val_not_null", "not null", columns=("val",)),
+        ],
+    )
+    all_passed, results = execute_rules(spark, df, config)
+    assert not all_passed
+    assert [(r.name, r.violation_count) for r in results] == [
+        ("grp_not_null", 0),
+        ("val_not_null", 2),
+    ]
+
+
+def test_rules_on_an_empty_frame_all_pass(spark):
+    empty = spark.createDataFrame([], "id int, grp string, val string")
+    config = DQConfig(
+        dq_id="t",
+        rules=[
+            Rule("1", "id_unique", "unique", columns=("id",)),
+            Rule("2", "val_not_null", "not null", columns=("val",)),
+            Rule("3", "bad_ids", "query", query="SELECT * FROM temp WHERE id < 0"),
+        ],
+    )
+    all_passed, results = execute_rules(spark, empty, config)
+    assert all_passed
+    assert [(r.violation_count, r.total_count) for r in results] == [(0, 0)] * 3
