@@ -44,40 +44,47 @@ def execute_rules(
 
     Every 1-row aggregate is keyed by rule position, not ``rule_id``, so
     rules that share an id still get a result each.
+
+    Query rules read the batch as the temp view ``temp``, for the duration
+    of the call only: it is registered (replacing any view of that name)
+    when the config has a query rule and dropped before returning.
     """
     kinds = [r.rule_type.strip().lower() for r in config.rules]
     if "query" in kinds:
         df.createOrReplaceTempView("temp")
-
-    # each part is one (key, counts) row; key 0 is the fused aggregate
-    # [total, one count per not-null rule], key i the unique or query rule
-    # at position i (1-based); slots[i - 1] says where rule i's count is
-    fused = [F.count(F.lit(1))]
-    parts, slots = [], []
-    for i, (r, kind) in enumerate(zip(config.rules, kinds), start=1):
-        if kind == "not null":
-            slots.append((0, len(fused)))
-            fused.append(F.sum(F.when(_not_null_violation_pred(r.columns), 1).otherwise(0)))
-            continue
-        if kind == "unique":
-            part = (
-                df.groupBy(*r.columns)
-                .agg(F.count(F.lit(1)).alias("__cnt"))
-                .where(F.col("__cnt") > 1)
-                .agg(
-                    F.lit(i),
-                    F.array(
-                        F.coalesce(F.sum(F.col("__cnt") - 1), F.lit(0)),  # duplicate rows
-                        F.count(F.lit(1)),  # duplicate keys
-                    ),
+    try:
+        # each part is one (key, counts) row; key 0 is the fused aggregate
+        # [total, one count per not-null rule], key i the unique or query rule
+        # at position i (1-based); slots[i - 1] says where rule i's count is
+        fused = [F.count(F.lit(1))]
+        parts, slots = [], []
+        for i, (r, kind) in enumerate(zip(config.rules, kinds), start=1):
+            if kind == "not null":
+                slots.append((0, len(fused)))
+                fused.append(F.sum(F.when(_not_null_violation_pred(r.columns), 1).otherwise(0)))
+                continue
+            if kind == "unique":
+                part = (
+                    df.groupBy(*r.columns)
+                    .agg(F.count(F.lit(1)).alias("__cnt"))
+                    .where(F.col("__cnt") > 1)
+                    .agg(
+                        F.lit(i),
+                        F.array(
+                            F.coalesce(F.sum(F.col("__cnt") - 1), F.lit(0)),  # duplicate rows
+                            F.count(F.lit(1)),  # duplicate keys
+                        ),
+                    )
                 )
-            )
-        else:
-            part = spark.sql(r.query).agg(F.lit(i), F.array(F.count(F.lit(1))))
-        parts.append(part)
-        slots.append((i, 0))
-    parts.insert(0, df.agg(F.lit(0), F.array(*fused)))
-    counts = dict(reduce(DataFrame.union, parts).collect())
+            else:
+                part = spark.sql(r.query).agg(F.lit(i), F.array(F.count(F.lit(1))))
+            parts.append(part)
+            slots.append((i, 0))
+        parts.insert(0, df.agg(F.lit(0), F.array(*fused)))
+        counts = dict(reduce(DataFrame.union, parts).collect())
+    finally:
+        if "query" in kinds:
+            spark.catalog.dropTempView("temp")
 
     total = counts[0][0]
     results = []

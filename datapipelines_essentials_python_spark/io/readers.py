@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from datapipelines_essentials_python_spark.errors import UnknownFileTypeError
+from datapipelines_essentials_python_spark.functions.hashing import row_hash_md5
 
 # filetype aliases accepted by the dispatcher (lowercase)
 _FORMAT_ALIASES = {
@@ -114,29 +115,19 @@ def read_with_audit_columns(
     ``<xml_file_name>`` elements before upload
     (``change_data_capture.py:9-15``) — an O(data) driver-side rewrite. Here
     the same audit surface is computed as native expressions *during* the
-    scan: ``file_name`` from ``input_file_name()`` and ``hashcode`` as an
-    ``md5`` of the (sorted-column) row payload, so nothing is rewritten and
-    the plan stays fully distributed (SURVEY §2.1 S10, §2.8 F7/F8).
+    scan: ``file_name`` from ``input_file_name()`` and ``hashcode`` as
+    ``functions.hashing.row_hash_md5`` of ``hash_columns`` (default: every
+    scanned column), so nothing is rewritten and the plan stays fully
+    distributed (SURVEY §2.1 S10, §2.8 F7/F8).
     """
     df = read_data(spark, filetype, location, schema=schema, options=options)
-    cols = sorted(hash_columns or df.columns)
     # input_file_name() yields a percent-encoded URI; decode it so names
     # with spaces/non-ASCII match the reference's raw file-name column.
     # Literal '+' is re-encoded first because url_decode (URLDecoder
     # semantics) would otherwise turn it into a space.
     decoded = F.url_decode(F.regexp_replace(F.input_file_name(), r"\+", "%2B"))
-    # ignoreNullFields=false keeps NULL columns present in the canonical
-    # JSON, so rows differing only in WHICH column is null hash differently.
     return (
         df.withColumn("file_name", F.element_at(F.split(decoded, "/"), -1))
-        .withColumn(
-            "hashcode",
-            F.md5(
-                F.to_json(
-                    F.struct(*[F.col(c) for c in cols]),
-                    {"ignoreNullFields": "false"},
-                )
-            ),
-        )
+        .withColumn("hashcode", row_hash_md5(df, hash_columns or df.columns))
         .withColumn("spark_timestamp", F.current_timestamp())
     )

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from datapipelines_essentials_python_spark.operators import text as text_ops
 from datapipelines_essentials_python_spark.utils.repartition import (
+    loop_parts,
     static_loop_planning,
 )
 
@@ -792,11 +793,9 @@ def connected_components(
     # Size the iteration's parallelism to the graph, not the cluster: dup
     # graphs are usually a tiny fraction of the corpus, and each propagation
     # round is a fixed number of jobs whose per-task overhead dominates when
-    # partitions vastly outnumber edges. ~100k edges per partition, capped
-    # at the cluster's parallelism.
-    n_edges = und_cached.count()
+    # partitions vastly outnumber edges (loop_parts).
     spark = edges.sparkSession
-    parts = max(1, min(spark.sparkContext.defaultParallelism, n_edges // 100_000 + 1))
+    parts = loop_parts(und_cached)
     und = und_cached.repartition(parts, "src").persist()
     # Round 0 fused into initialization: comp = min(id, direct neighbors).
     labels = (
@@ -934,14 +933,12 @@ def connected_components_star(
     # the outer round's static plan — exchange reuse does not cover the
     # pre-exchange union/scan work and the blowup compounds.
     spark = edges.sparkSession
-    par_cap = spark.sparkContext.defaultParallelism
-    # graph-sized parallelism, same ~100k-edges-per-partition heuristic
-    # as connected_components, refreshed each round from the signature
-    # count (the edge set only shrinks toward the star fixpoint)
+    # graph-sized parallelism (loop_parts), refreshed each round from the
+    # signature count (the edge set only shrinks toward the star fixpoint)
     n_e = e.count()
     for _ in range(max_iter):
         rounds += 1
-        parts = max(1, min(par_cap, n_e // 100_000 + 1))
+        parts = loop_parts(e, rows=n_e)
         # AQE off for the loop-step materialization only: the round's
         # ~6 exchanges otherwise each become a separately planned and
         # scheduled AQE stage job — see static_loop_planning; shuffle
@@ -1202,10 +1199,7 @@ def threshold_sensitivity(
         .persist()
     )
     # same graph-sized parallelism heuristic as connected_components
-    n_edges = und_cached.count()
-    parts = max(
-        1, min(spark.sparkContext.defaultParallelism, n_edges // 100_000 + 1)
-    )
+    parts = loop_parts(und_cached)
     und = und_cached.repartition(parts, "t", "src").persist()
     labels = (
         und.groupBy("t", F.col("src").alias("id"))

@@ -28,65 +28,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datapipelines_essentials_python_spark.utils.repartition import (
+    loop_parts,
+    pinned_checkpoint,
     static_loop_planning,
 )
 
 #: quantization applied to per-edge rank contributions before the
 #: destination-side sum — exact decimal addition at any parallelism.
 _CONTRIB_DECIMAL = "decimal(28,12)"
-
-
-def _pinned_checkpoint(
-    df: DataFrame, *keys: str, parts: int | None = None
-) -> DataFrame:
-    """Eager ``localCheckpoint`` that PRESERVES hash partitioning on
-    ``keys`` (round-9 optimization, guide §2.4 "remove shuffles
-    outright").
-
-    ``Dataset.localCheckpoint`` copies the physical plan's
-    ``outputPartitioning`` into the checkpointed ``LogicalRDD`` — but
-    under AQE the physical plan is an ``AdaptiveSparkPlanExec`` whose
-    partitioning reads ``UnknownPartitioning(0)``, so every checkpoint
-    made inside an iterative loop silently loses its layout and every
-    iteration re-exchanges (or worse, mis-broadcasts) the big side.
-    Disabling AQE JUST for the checkpoint materialization keeps the
-    hash layout visible to downstream joins: an iteration join keyed on
-    ``keys`` then satisfies ENSURE_REQUIREMENTS with no new Exchange —
-    the edge table is shuffled ONCE per query instead of once per
-    iteration. Partition count follows ``spark.sql.shuffle.partitions``
-    (scale-adaptive: the session factory sizes it from the core budget,
-    AQE still coalesces everywhere else) unless the caller passes an
-    explicit ``parts`` — used when the stage consuming the checkpoint
-    multiplies rows (wedge explodes), so its width must derive from the
-    OUTPUT row count, not the input bytes."""
-    spark = df.sparkSession
-    n = parts if parts else int(spark.conf.get("spark.sql.shuffle.partitions"))
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        out = df.repartition(n, *[F.col(k) for k in keys]).localCheckpoint(
-            eager=True
-        )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-    return out
-
-
-def _loop_parts(df: DataFrame, rows: int | None = None) -> int:
-    """Row-derived width for pinned loop state (round-9, guide §2.5):
-    ~100k rows per task, capped at the cluster's core budget — the same
-    heuristic the frontier/components loops use. The power-iteration
-    loops previously pinned at the session's ``spark.sql.shuffle
-    .partitions`` (the core budget) regardless of state size, so a
-    20k-row rank vector checkpointed 32 ways every iteration and the
-    per-task scheduling overhead dominated the round. Width derives
-    from the OBSERVED edge/state row count, so it is scale-adaptive —
-    at real scale it saturates at the cluster parallelism and the pins
-    behave exactly as before."""
-    spark = df.sparkSession
-    n = rows if rows is not None else df.count()
-    par_cap = spark.sparkContext.defaultParallelism
-    return max(1, min(par_cap, n // 100_000 + 1))
 
 
 #: Minimum row-derived width at which a per-round keyed fold repartition
@@ -110,7 +59,7 @@ def _fold_parts(df: DataFrame, rows: int | None = None) -> int | None:
     byte-based coalescing already provides (``_FOLD_MIN_PARTS``) — the
     caller then skips the repartition entirely, keeping the map-side
     partial aggregation and the shorter per-round plan."""
-    parts = _loop_parts(df, rows=rows)
+    parts = loop_parts(df, rows=rows)
     return parts if parts > _FOLD_MIN_PARTS else None
 
 
@@ -124,18 +73,14 @@ def _wedge_parts(deg: DataFrame, degree_col: str = "degree") -> int:
     table — ``Σ C(deg, 2)`` rows, a ~C(d̄,2)/d̄× row multiplier the byte
     estimate never sees, so the whole enumeration ran on 4 tasks while
     the rest of the cluster idled. One tiny agg over the node-sized
-    degree table gives the true output row count; ~100k wedge rows per
-    task (the components-loop heuristic) capped at the cluster's core
-    budget keeps it scale-adaptive rather than a local[32] constant."""
-    spark = deg.sparkSession
+    degree table gives the true output row count, which sizes the join
+    with the loop heuristic (:func:`loop_parts`)."""
     row = deg.agg(
         F.sum(
             (F.col(degree_col) * (F.col(degree_col) - 1) / 2).cast("long")
         ).alias("w")
     ).first()
-    wedge_rows = int(row["w"] or 0)
-    par_cap = spark.sparkContext.defaultParallelism
-    return max(1, min(par_cap, wedge_rows // 100_000 + 1))
+    return loop_parts(deg, rows=int(row["w"] or 0))
 
 
 def out_degrees(edges: DataFrame) -> DataFrame:
@@ -324,7 +269,7 @@ def hits(
     Spark-first shape, same discipline as :func:`pagerank` (round-9
     loop restructure, guide §2.4/§3.1): the edge list is pinned TWICE
     up front — once hash-partitioned on ``src``, once on ``dst``
-    (:func:`_pinned_checkpoint`; the half-steps alternate join keys, so
+    (:func:`pinned_checkpoint`; the half-steps alternate join keys, so
     one layout cannot serve both) — and each half-step is then one
     ShuffledHashJoin in which only the node-sized score vector moves
     (the ``shuffle_hash`` hint keeps the planner from broadcasting the
@@ -357,15 +302,15 @@ def hits(
     if materialize:
         nodes = nodes.localCheckpoint(eager=True)
         # one edge-derived width for every pin in the loop (see
-        # _loop_parts) — co-partitioned counts must match for the
+        # loop_parts) — co-partitioned counts must match for the
         # half-step SHJs to stay exchange-free
-        parts = _loop_parts(edges)
+        parts = loop_parts(edges)
         # one stationary copy per join key — the half-steps alternate
         # between src- and dst-keyed joins, and a pinned layout only
         # removes the per-step edge Exchange for ITS key
         edges_by = {
-            "src": _pinned_checkpoint(edges, "src", parts=parts),
-            "dst": _pinned_checkpoint(edges, "dst", parts=parts),
+            "src": pinned_checkpoint(edges, "src", parts=parts),
+            "dst": pinned_checkpoint(edges, "dst", parts=parts),
         }
     else:
         parts = None
@@ -394,7 +339,7 @@ def hits(
             # ``raw`` twice (value branch + the 1-row norm aggregate),
             # so an unpinned raw re-executes the contribution join per
             # consumer
-            raw = _pinned_checkpoint(raw, "node", parts=parts)
+            raw = pinned_checkpoint(raw, "node", parts=parts)
         # squared terms quantize to 4 dp, not 12: raw sums reach ~1e5+ at
         # large tiers, so a 12-dp squared sum would cross the >=17-
         # significant-digit band where DuckDB's decimal->double is
@@ -419,17 +364,17 @@ def hits(
 
     hub = nodes.select("node", F.lit(1.0).alias("score"))
     if materialize:
-        hub = _pinned_checkpoint(hub, "node", parts=parts)
+        hub = pinned_checkpoint(hub, "node", parts=parts)
     auth = None
     for _ in range(iterations):
         # authorities from current hubs: contributions flow src → dst
         auth = _half_step(hub, "src", "dst")
         if materialize:
-            auth = _pinned_checkpoint(auth, "node", parts=parts)
+            auth = pinned_checkpoint(auth, "node", parts=parts)
         # hubs from fresh authorities: contributions flow dst → src
         hub = _half_step(auth, "dst", "src")
         if materialize:
-            hub = _pinned_checkpoint(hub, "node", parts=parts)
+            hub = pinned_checkpoint(hub, "node", parts=parts)
     return (
         nodes.join(hub.select("node", F.col("score").alias("hub")), "node", "left")
         .join(auth.select("node", F.col("score").alias("authority")), "node", "left")
@@ -608,11 +553,11 @@ def pagerank(
     wedges = edges.join(degrees.withColumnRenamed("node", "src"), "src", "left")
     if materialize:
         # one edge-derived width for every pin in the loop (see
-        # _loop_parts) — co-partitioned counts must match for the
+        # loop_parts) — co-partitioned counts must match for the
         # per-iteration SHJ to stay exchange-free
-        parts = _loop_parts(edges)
-        wedges = _pinned_checkpoint(wedges, "src", parts=parts)
-        ranks = _pinned_checkpoint(ranks, "node", parts=parts)
+        parts = loop_parts(edges)
+        wedges = pinned_checkpoint(wedges, "src", parts=parts)
+        ranks = pinned_checkpoint(ranks, "node", parts=parts)
     dangling_nodes = ranks.select("node").join(degrees, "node", "left_anti")
     if materialize:
         dangling_nodes = dangling_nodes.localCheckpoint(eager=True)
@@ -624,7 +569,7 @@ def pagerank(
         prev = ranks
         ranks = _pagerank_iteration(wedges, ranks, dangling_nodes, share, damping)
         if materialize:
-            ranks = _pinned_checkpoint(ranks, "node", parts=parts)
+            ranks = pinned_checkpoint(ranks, "node", parts=parts)
         if tol is not None:
             # 1-row L1 delta off two checkpointed node-sized tables; the
             # quantized DECIMAL sum makes the stop decision partitioning-
@@ -716,11 +661,11 @@ def personalized_pagerank(
     wedges = edges.join(degrees.withColumnRenamed("node", "src"), "src", "left")
     if materialize:
         # one edge-derived width for every pin in the loop (see
-        # _loop_parts) — co-partitioned counts must match for the
+        # loop_parts) — co-partitioned counts must match for the
         # per-iteration SHJ to stay exchange-free
-        parts = _loop_parts(edges)
-        wedges = _pinned_checkpoint(wedges, "src", parts=parts)
-        ranks = _pinned_checkpoint(ranks, "node", parts=parts)
+        parts = loop_parts(edges)
+        wedges = pinned_checkpoint(wedges, "src", parts=parts)
+        ranks = pinned_checkpoint(ranks, "node", parts=parts)
     dangling_nodes = ranks.select("node").join(degrees, "node", "left_anti")
     if materialize:
         dangling_nodes = dangling_nodes.localCheckpoint(eager=True)
@@ -760,7 +705,7 @@ def personalized_pagerank(
             )
         )
         if materialize:
-            ranks = _pinned_checkpoint(ranks, "node", parts=parts)
+            ranks = pinned_checkpoint(ranks, "node", parts=parts)
     return ranks.select("node", "rank")
 
 
@@ -1081,11 +1026,11 @@ def lpa_communities(
         # broadcastable, the planner re-exchanges adj by src per round —
         # the one fundamental LPA message shuffle — and the agg chain
         # still rides the join's output partitioning. Width is
-        # edge-derived (_loop_parts), not the session conf — every
+        # edge-derived (loop_parts), not the session conf — every
         # per-round stage rides this layout, so a small graph no longer
         # pays core-budget-many tasks per round.
-        adj = _pinned_checkpoint(
-            adj, "dst", parts=_loop_parts(und, rows=2 * und.count())
+        adj = pinned_checkpoint(
+            adj, "dst", parts=loop_parts(und, rows=2 * und.count())
         )
     labels = (
         adj.select(F.col("src").alias("node"))
@@ -1152,8 +1097,7 @@ def edge_support(
         if materialize:
             und = und.localCheckpoint(eager=True)
     deg = (
-        und.select(F.col("u").alias("node"))
-        .unionByName(und.select(F.col("v").alias("node")))
+        und.select(F.explode(F.array("u", "v")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))
     )
@@ -1180,81 +1124,26 @@ def edge_support(
     )
     closing = oriented.select(F.col("src").alias("a"), F.col("dst").alias("c"))
     tri = wedges.join(closing, ["a", "c"])
-    sides = (
-        tri.select(F.col("a").alias("x"), F.col("b").alias("y"))
-        .unionByName(tri.select(F.col("b").alias("x"), F.col("c").alias("y")))
-        .unionByName(tri.select(F.col("a").alias("x"), F.col("c").alias("y")))
+    # one pass over ``tri`` emits its three sides: a 3-way union would
+    # run the wedge join three times, and nest three copies of the
+    # previous round's plan per round in a lazy ktruss
+    sides = tri.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("a").alias("x"), F.col("b").alias("y")),
+                F.struct(F.col("b").alias("x"), F.col("c").alias("y")),
+                F.struct(F.col("a").alias("x"), F.col("c").alias("y")),
+            )
+        ).alias("s")
     )
     sup = sides.select(
-        F.least(F.col("x"), F.col("y")).alias("u"),
-        F.greatest(F.col("x"), F.col("y")).alias("v"),
+        F.least(F.col("s.x"), F.col("s.y")).alias("u"),
+        F.greatest(F.col("s.x"), F.col("s.y")).alias("v"),
     ).groupBy("u", "v").agg(F.count(F.lit(1)).cast("long").alias("support"))
     return und.join(sup, ["u", "v"], "left").select(
         "u",
         "v",
         F.coalesce(F.col("support"), F.lit(0).cast("long")).alias("support"),
-    )
-
-
-def _peel_support_update(
-    old_edges: DataFrame, removed: DataFrame, kept_sup: DataFrame
-) -> DataFrame:
-    """Incremental edge-support update after one truss peel (round-10,
-    guide §2.4 "do less work per round"; VERDICT r09 item 3).
-
-    ``kept_sup`` carries the support each kept edge had in the OLD graph
-    (``old_edges``, canonical u < v); peeling ``removed`` destroys
-    exactly the old-graph triangles that contain at least one removed
-    edge, so the new support is the old support minus, per kept edge,
-    the number of DISTINCT destroyed triangles it belongs to. Cost is
-    proportional to the removed edges' wedge work — Σ_{(u,v)∈R} deg(u)
-    candidate rows — instead of a full O(m^1.5) re-enumeration of the
-    surviving graph; peel rounds shed most edges in round one, so each
-    subsequent update touches a rapidly shrinking frontier.
-
-    Correctness: a destroyed triangle {u, v, w} (removed edge (u, v),
-    common neighbor w) is found once per removed edge it contains
-    (2-3 removed edges ⇒ 2-3 candidate rows), so triangles are
-    DEDUPLICATED on their sorted node triple before crediting the
-    decrements — each kept edge loses exactly one unit per destroyed
-    triangle. Kept edges in no destroyed triangle left-join to a zero
-    delta. Pure integer arithmetic, same as :func:`edge_support`.
-    """
-    adj = old_edges.select(
-        F.col("u").alias("a"), F.col("v").alias("b")
-    ).unionByName(old_edges.select(F.col("v").alias("a"), F.col("u").alias("b")))
-    # w adjacent to u in the old graph (w == v would be the removed edge
-    # itself, not a triangle apex)
-    cand = removed.join(
-        adj.select(F.col("a").alias("u"), F.col("b").alias("w")), "u"
-    ).where(F.col("w") != F.col("v"))
-    # keep only apexes also adjacent to v: {u, v, w} is an old triangle
-    tri = cand.join(
-        adj.select(F.col("a").alias("v"), F.col("b").alias("w")), ["v", "w"]
-    )
-    tri_d = (
-        tri.select(F.array_sort(F.array("u", "v", "w")).alias("t"))
-        .distinct()
-        .select(
-            F.col("t")[0].alias("x"),
-            F.col("t")[1].alias("y"),
-            F.col("t")[2].alias("z"),
-        )
-    )
-    sides = (
-        tri_d.select(F.col("x").alias("u"), F.col("y").alias("v"))
-        .unionByName(tri_d.select(F.col("x").alias("u"), F.col("z").alias("v")))
-        .unionByName(tri_d.select(F.col("y").alias("u"), F.col("z").alias("v")))
-    )
-    delta = sides.groupBy("u", "v").agg(
-        F.count(F.lit(1)).cast("long").alias("__d")
-    )
-    return kept_sup.join(delta, ["u", "v"], "left").select(
-        "u",
-        "v",
-        (F.col("support") - F.coalesce(F.col("__d"), F.lit(0).cast("long")))
-        .cast("long")
-        .alias("support"),
     )
 
 
@@ -1278,10 +1167,13 @@ def ktruss(
     SQL oracle unrolls exactly ``max_rounds`` support-filter rounds and
     one final support count, replaying the result bit-for-bit.
 
-    Cost shape: each round is one :func:`edge_support` pass — O(m^1.5)
-    wedge work on the SURVIVING edges — and the first round removes the
-    long tail (the affinity graph sheds ~half its edges in round one),
-    so per-round cost decays quickly. All counts integer; no floats
+    Cost shape: each round recounts support from scratch — one
+    :func:`edge_support` pass, O(m^1.5) degree-ordered wedge work on the
+    SURVIVING edges — then one checkpoint of the support table and one
+    1-row count of the kept edges as the convergence test; a cap-bound
+    run closes with one more recount. The first round removes the long
+    tail (the affinity graph sheds ~half its edges in round one), so
+    per-round cost decays quickly. All counts integer; no floats
     anywhere.
 
     → ``(u, v, support)``: the surviving edges with their support inside
@@ -1298,42 +1190,24 @@ def ktruss(
     if materialize:
         cur = cur.localCheckpoint(eager=True)
     # loop state is canonical (u < v, distinct, pinned) by construction,
-    # so every edge_support call runs with assume_normalized — round 9
-    # removed the per-round re-normalization (one redundant distinct
-    # exchange + checkpoint per peel) and the per-round cur.count()
-    # action (the previous round's kept.count() IS this round's size).
+    # so every edge_support call runs with assume_normalized, and the
+    # previous round's kept count IS this round's size
     n_cur = cur.count()
-    # Round-10 (guide §2.4, VERDICT r09 item 3): ONE full O(m^1.5)
-    # support pass up front; every peel round then updates support
-    # INCREMENTALLY from the removed edges' destroyed triangles
-    # (:func:`_peel_support_update`) instead of re-enumerating every
-    # wedge of the surviving graph — max_rounds+1 full passes become 1
-    # full pass + max_rounds removed-frontier-sized updates, and the
-    # closing recount disappears (the last update's output IS the
-    # support of the final edge set). Identity per round is proved in
-    # tests (same integers as a fresh edge_support of the kept set).
-    sup = edge_support(cur, materialize=materialize, assume_normalized=True)
     for _ in range(max_rounds):
+        sup = edge_support(cur, materialize=materialize, assume_normalized=True)
         if materialize:
-            # one materialization per round, same discipline as before:
-            # ``sup`` feeds the kept/removed filters, the delta join,
-            # and possibly the fixpoint return.
+            # ``sup`` feeds the kept filter, its count, the next round's
+            # wedges and possibly the fixpoint return
             sup = sup.localCheckpoint(eager=True)
-        kept_sup = sup.where(F.col("support") >= thresh)
+        kept = sup.where(F.col("support") >= thresh)
         # 1-row scalar action — the convergence test (same discipline as
         # kcore); reads checkpointed state, not re-derived lineage.
-        n_kept = kept_sup.count()
+        n_kept = kept.count()
         if n_kept == n_cur:
-            # fixpoint: every edge of ``cur`` kept its support, so
-            # ``sup`` IS edge_support of the final set.
+            # fixpoint: no edge peeled, so ``sup`` is the final support
             return sup
-        removed = sup.where(F.col("support") < thresh).select("u", "v")
-        sup = _peel_support_update(cur, removed, kept_sup)
-        # next round's graph: the kept edges (narrow filter over the
-        # checkpointed support table — no re-shuffle needed; the update
-        # join re-reads it per reference at scan cost only)
-        cur, n_cur = kept_sup.select("u", "v"), n_kept
-    return sup
+        cur, n_cur = kept, n_kept
+    return edge_support(cur, materialize=materialize, assume_normalized=True)
 
 
 def adamic_adar(
@@ -1401,7 +1275,7 @@ def adamic_adar(
         # capped centers), not the adjacency's bytes — see _wedge_parts;
         # the pinned layout on w serves both self-join legs with zero
         # further exchanges
-        adj = _pinned_checkpoint(
+        adj = pinned_checkpoint(
             adj, "w", parts=_wedge_parts(deg.where(F.col("degree") >= 2))
         )
     wedge = (
@@ -1667,7 +1541,7 @@ def _nonadjacent_common_pairs(
         # capped centers), not the adjacency's bytes — see _wedge_parts;
         # the pinned layout on w serves both self-join legs with zero
         # further exchanges
-        adj = _pinned_checkpoint(adj, "w", parts=_wedge_parts(centers))
+        adj = pinned_checkpoint(adj, "w", parts=_wedge_parts(centers))
     wedge = (
         adj.withColumnRenamed("n", "a")
         .join(adj.withColumnRenamed("n", "b"), "w")

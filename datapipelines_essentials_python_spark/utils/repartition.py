@@ -16,6 +16,20 @@ from pyspark.sql import functions as F
 from datapipelines_essentials_python_spark.functions.hashing import salted_key
 
 
+def loop_parts(df: DataFrame, rows: int | None = None) -> int:
+    """Row-derived width for iterative-loop state (round-9, guide §2.5):
+    ~100k rows per task, capped at the cluster's core budget. ``rows``
+    is the caller's observed row count (``df`` is counted when it is
+    omitted), so the width tracks the loop state's size rather than a
+    local[32] constant — at real scale it saturates at the cluster
+    parallelism. The one home of this heuristic: the components loops
+    pass it to :func:`static_loop_planning`, the graph loops to
+    :func:`pinned_checkpoint`."""
+    n = rows if rows is not None else df.count()
+    par_cap = df.sparkSession.sparkContext.defaultParallelism
+    return max(1, min(par_cap, n // 100_000 + 1))
+
+
 @contextlib.contextmanager
 def static_loop_planning(spark, shuffle_partitions: int | None = None):
     """Disable AQE while materializing ONE step of an iterative loop
@@ -33,14 +47,17 @@ def static_loop_planning(spark, shuffle_partitions: int | None = None):
     everything outside the loop — including the one-time corpus-sized
     pass that builds the loop's input.
 
-    ``shuffle_partitions`` is REQUIRED in practice (pass the caller's
-    graph-sized heuristic, e.g. ``edges // 100_000 + 1`` capped at the
-    cluster parallelism): without AQE's coalescing, every in-loop
+    ``shuffle_partitions`` is REQUIRED in practice for loop steps (pass
+    :func:`loop_parts`): without AQE's coalescing, every in-loop
     exchange otherwise inherits the session-wide
     ``spark.sql.shuffle.partitions`` — measured 84 s (tens of
-    thousands of empty tasks) vs 5 s on the cell graph. Deriving it
-    from the OBSERVED loop-state size keeps it scale-adaptive rather
-    than a local[32] constant."""
+    thousands of empty tasks) vs 5 s on the cell graph.
+
+    Concurrency: the flip is a SESSION-wide conf change, so this is for
+    single-threaded use per session only — a second thread running a
+    query on the same session while the block is open plans without
+    AQE (and with the loop's partition count). This context manager is
+    the package's only writer of ``spark.sql.adaptive.enabled``."""
     prev = spark.conf.get("spark.sql.adaptive.enabled")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -57,30 +74,30 @@ def pinned_checkpoint(df: DataFrame, *keys, parts: int | None = None) -> DataFra
     """Eager ``localCheckpoint`` that PRESERVES hash partitioning on
     ``keys`` (round-9, guide §2.4) — the shared-stage primitive for a
     DataFrame consumed by several operators that all want the same
-    clustering (an agg and a join on the same key, a distinct whose
-    grouping keys are a superset of ``keys``).
+    clustering (an iteration join keyed on ``keys``, an agg and a join
+    on the same key, a distinct whose grouping keys are a superset of
+    ``keys``).
 
-    Under AQE a checkpointed plan reports ``UnknownPartitioning``, so
-    each consumer would re-exchange (and re-compute the upstream
-    projection feeding its exchange — for expensive projections like
-    per-window md5 fingerprints that is a full duplicate pass).
-    Disabling AQE just for this materialization keeps the hash layout
-    visible: every consumer keyed on ``keys`` (or a superset) satisfies
-    its required distribution with zero further exchanges, and the
-    expensive upstream runs exactly once. ``parts`` defaults to the
-    session's ``spark.sql.shuffle.partitions`` (scale-adaptive: the
-    session factory sizes it from the core budget)."""
+    ``Dataset.localCheckpoint`` copies the physical plan's
+    ``outputPartitioning`` into the checkpointed ``LogicalRDD``, but
+    under AQE that plan is an ``AdaptiveSparkPlanExec`` reporting
+    ``UnknownPartitioning(0)``, so each consumer would re-exchange (and
+    re-compute the upstream projection feeding its exchange; inside an
+    iterative loop, every iteration re-shuffles the big side).
+    Materializing under :func:`static_loop_planning` keeps the hash
+    layout visible: every consumer keyed on ``keys`` (or a superset)
+    satisfies its required distribution with zero further exchanges.
+    ``parts`` defaults to the session's ``spark.sql.shuffle.partitions``
+    (the session factory sizes it from the core budget); loops pass
+    :func:`loop_parts`, and wedge self-joins a width derived from their
+    OUTPUT row count, since the exploding stage's input bytes
+    under-state its work."""
     spark = df.sparkSession
     n = parts if parts else int(spark.conf.get("spark.sql.shuffle.partitions"))
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        out = df.repartition(n, *[F.col(k) for k in keys]).localCheckpoint(
+    with static_loop_planning(spark):
+        return df.repartition(n, *[F.col(k) for k in keys]).localCheckpoint(
             eager=True
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-    return out
 
 
 def data_frame_repartition(

@@ -161,3 +161,19 @@ def test_rules_on_an_empty_frame_all_pass(spark):
     all_passed, results = execute_rules(spark, empty, config)
     assert all_passed
     assert [(r.violation_count, r.total_count) for r in results] == [(0, 0)] * 3
+
+
+def test_query_rule_view_lives_only_for_the_call(spark):
+    """``temp`` is the batch for the duration of one call and gone after
+    it, so consecutive calls on different frames each see their own rows."""
+    config = DQConfig(
+        dq_id="t",
+        rules=[Rule("1", "neg_ids", "query", query="SELECT * FROM temp WHERE id < 0")],
+    )
+    first = spark.createDataFrame([(-1,), (2,)], "id int")
+    second = spark.createDataFrame([(-1,), (-2,), (-3,)], "id int")
+    _, results = execute_rules(spark, first, config)
+    assert not spark.catalog.tableExists("temp")
+    _, results2 = execute_rules(spark, second, config)
+    assert not spark.catalog.tableExists("temp")
+    assert [r.violation_count for r in results + results2] == [1, 3]

@@ -64,6 +64,25 @@ def test_audit_columns(spark, df, tmp_path):
     assert len({r["hashcode"] for r in rows}) == 2  # distinct rows → distinct digests
 
 
+
+def test_audit_hashcode_is_row_hash_md5_with_nulls(spark, tmp_path):
+    """hashcode is row_hash_md5 over the scanned columns: sorted order and
+    NULL fields kept, so rows differing only in which field is NULL get
+    different digests."""
+    from datapipelines_essentials_python_spark.functions.hashing import row_hash_md5
+
+    src = spark.createDataFrame(
+        [(1, None, "x"), (1, "x", None)], "id int, name string, tag string"
+    )
+    path = str(tmp_path / "audit_nulls")
+    write_data(src, "parquet", path)
+    out = read_with_audit_columns(spark, "parquet", path)
+    rows = out.select(
+        "hashcode", row_hash_md5(out, ["id", "name", "tag"]).alias("want")
+    ).collect()
+    assert len(rows) == 2 and all(r["hashcode"] == r["want"] for r in rows)
+    assert rows[0]["hashcode"] != rows[1]["hashcode"]
+
 def test_xml_native_reader(spark, tmp_path):
     p = tmp_path / "x.xml"
     p.write_text(

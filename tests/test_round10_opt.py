@@ -1,13 +1,10 @@
-"""Round-10 optimization tests.
+"""Round-10 graph tests.
 
-1. k-truss incremental support update (VERDICT r09 item 3): the
-   peel loop now carries support forward via
-   ``graph._peel_support_update`` instead of re-enumerating every wedge
-   of the surviving graph each round — these tests prove the update is
-   INTEGER-IDENTICAL to a fresh ``edge_support`` of the kept subgraph,
-   including the triangles-with-multiple-removed-edges dedup case, and
-   that ``ktruss`` end-to-end matches a naive recount-every-round
-   reference.
+1. k-truss peel loop: ``graph.ktruss`` recounts support every round; it
+   is checked against a pure-Python recount-per-round reference
+   (adjacency sets and intersections, no Spark) with the ``max_rounds``
+   cap binding and not, and its checkpointing path against the lazy
+   plan-shape mode.
 
 2. Frontier-loop fold gate (VERDICT r09 item 1): the round-9 per-round
    keyed fold repartition is now applied only when its row-derived
@@ -27,100 +24,36 @@ def _sup_map(df):
     return {(r["u"], r["v"]): r["support"] for r in df.collect()}
 
 
-# ------------------------------------------------ incremental support
+# ------------------------------------------------ k-truss peel
 
 
-def _check_update_matches_recount(spark, pairs, thresh):
-    """One peel step by hand: full support, filter at ``thresh``, then
-    compare _peel_support_update against a fresh edge_support of the
-    kept subgraph."""
-    edges = spark.createDataFrame(pairs, "src long, dst long")
-    cur = graph.undirected_edges(edges)
-    sup = graph.edge_support(cur, materialize=False, assume_normalized=True)
-    kept_sup = sup.where(F.col("support") >= thresh)
-    removed = sup.where(F.col("support") < thresh).select("u", "v")
-    updated = graph._peel_support_update(cur, removed, kept_sup)
-    fresh = graph.edge_support(
-        kept_sup.select("u", "v"), materialize=False, assume_normalized=True
-    )
-    assert _sup_map(updated) == _sup_map(fresh)
+def _python_support(edges):
+    """Triangle support per canonical edge: |N(u) ∩ N(v)|."""
+    nbrs = {}
+    for u, v in edges:
+        nbrs.setdefault(u, set()).add(v)
+        nbrs.setdefault(v, set()).add(u)
+    return {(u, v): len(nbrs[u] & nbrs[v]) for u, v in edges}
 
 
-def test_peel_update_matches_recount_pendant_chain(spark):
-    """Two triangles sharing a node plus a pendant edge (the round-8
-    fixture): removing the pendant destroys no triangle — every kept
-    delta is 0."""
-    _check_update_matches_recount(
-        spark,
-        [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (3, 5), (5, 6)],
-        thresh=1,
-    )
-
-
-def test_peel_update_matches_recount_k4_minus_edge(spark):
-    """K4 minus one edge at thresh=2: the two support-1 edges peel and
-    their destroyed triangles drag the shared edges down — the cascade
-    case where stale support would be wrong."""
-    _check_update_matches_recount(
-        spark,
-        [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4)],
-        thresh=2,
-    )
-
-
-def test_peel_update_dedups_triangles_with_two_removed_edges(spark):
-    """A triangle where TWO of the three edges are removed in the same
-    peel: the destroyed triangle is found once per removed edge, so
-    without the sorted-triple dedup the surviving edge would be
-    decremented twice (support -1 instead of 0). Graph: K4 on {1,2,3,4}
-    plus a pendant triangle {1, 2, 5} whose edges (1,5) and (2,5) both
-    have support 1 and peel together at thresh=2."""
-    pairs = [
-        (1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),  # K4, support 2
-        (1, 5), (2, 5),  # pendant triangle edges, support 1
-    ]
-    edges = spark.createDataFrame(pairs, "src long, dst long")
-    cur = graph.undirected_edges(edges)
-    sup = graph.edge_support(cur, materialize=False, assume_normalized=True)
-    kept_sup = sup.where(F.col("support") >= 2)
-    removed = sup.where(F.col("support") < 2).select("u", "v")
-    # sanity: exactly the two pendant edges peel, and they share the
-    # destroyed triangle {1, 2, 5} with kept edge (1, 2)
-    assert sorted((r["u"], r["v"]) for r in removed.collect()) == [(1, 5), (2, 5)]
-    updated = _sup_map(graph._peel_support_update(cur, removed, kept_sup))
-    # (1,2) loses exactly ONE triangle ({1,2,5}) despite two removed
-    # edges pointing at it; K4's other edges are untouched
-    assert updated == {
-        (1, 2): 1, (1, 3): 2, (1, 4): 2, (2, 3): 2, (2, 4): 2, (3, 4): 2,
-    }
-    fresh = graph.edge_support(
-        kept_sup.select("u", "v"), materialize=False, assume_normalized=True
-    )
-    assert updated == _sup_map(fresh)
-
-
-def _naive_ktruss(spark, pairs, k, max_rounds):
-    """The pre-round-10 algorithm: full edge_support recount per round."""
-    thresh = k - 2
-    cur = graph.undirected_edges(
-        spark.createDataFrame(pairs, "src long, dst long")
-    )
-    n_cur = cur.count()
+def _python_ktruss(pairs, k, max_rounds):
+    """Recount-per-round reference: peel every edge with support below
+    k - 2, recount on the survivors, stop at the fixpoint or after
+    ``max_rounds`` peels (then one closing recount)."""
+    edges = {(min(a, b), max(a, b)) for a, b in pairs if a != b}
     for _ in range(max_rounds):
-        sup = graph.edge_support(cur, materialize=False, assume_normalized=True)
-        kept = sup.where(F.col("support") >= thresh).select("u", "v")
-        n_kept = kept.count()
-        if n_kept == n_cur:
+        sup = _python_support(edges)
+        kept = {e for e, s in sup.items() if s >= k - 2}
+        if kept == edges:
             return sup
-        cur, n_cur = kept, n_kept
-    return graph.edge_support(cur, materialize=False, assume_normalized=True)
+        edges = kept
+    return _python_support(edges)
 
 
-def test_ktruss_matches_naive_recount_multi_round(spark):
-    """End-to-end: the incremental ktruss equals the recount-every-round
-    reference on a graph that needs several cascading rounds (two K4s
-    bridged by a triangle chain plus noise edges), at k=3 and k=4,
-    both with the cap binding and not."""
+def test_ktruss_matches_python_recount_reference(spark):
+    """Two K4s bridged by a triangle chain plus noise edges: the bridge
+    cascades away over several rounds, so at max_rounds 1 and 2 the cap
+    binds and at 4 the fixpoint is reached."""
     pairs = [
         # K4 A
         (1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),
@@ -131,12 +64,13 @@ def test_ktruss_matches_naive_recount_multi_round(spark):
         # noise
         (2, 12), (12, 13),
     ]
+    edges = spark.createDataFrame(pairs, "src long, dst long")
     for k in (3, 4):
         for rounds in (1, 2, 4):
-            got = _sup_map(graph.ktruss(spark.createDataFrame(
-                pairs, "src long, dst long"), k=k, max_rounds=rounds))
-            want = _sup_map(_naive_ktruss(spark, pairs, k, rounds))
-            assert got == want, (k, rounds)
+            got = _sup_map(
+                graph.ktruss(edges, k=k, max_rounds=rounds, materialize=True)
+            )
+            assert got == _python_ktruss(pairs, k, rounds), (k, rounds)
 
 
 def test_ktruss_materialized_matches_plan_mode(spark):
@@ -158,14 +92,15 @@ def test_ktruss_materialized_matches_plan_mode(spark):
 def test_fold_parts_gates_small_widths(spark):
     """_fold_parts returns None at or below _FOLD_MIN_PARTS (the keyed
     repartition would recruit no parallelism AQE doesn't already give)
-    and the row-derived width above it."""
+    and the row-derived width above it — at any core count."""
     small = spark.range(10).select(F.col("id").alias("x"))
     assert graph._fold_parts(small) is None
-    # rows argument bypasses the count: 4 * 100k rows -> parts 5 > gate
-    assert graph._fold_parts(small, rows=400_001) == min(
-        5, spark.sparkContext.defaultParallelism
-    )
-    assert graph._fold_parts(small, rows=400_000) is None
+    # rows argument bypasses the count: 399_999 rows -> parts 4, gated
+    assert graph._fold_parts(small, rows=399_999) is None
+    # 400_001 rows -> parts 5, capped at the core count, then gated
+    width = min(5, spark.sparkContext.defaultParallelism)
+    want = width if width > graph._FOLD_MIN_PARTS else None
+    assert graph._fold_parts(small, rows=400_001) == want
 
 
 def test_bfs_results_identical_with_and_without_materialize(spark):

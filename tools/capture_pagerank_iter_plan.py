@@ -10,7 +10,8 @@ Auto-detects which implementation the importing repo holds:
   - old (pre-restructure): ``pagerank_step(ranks, edges, degrees)`` over
     plain eager localCheckpoints — what HEAD executed per iteration;
   - new: ``_pagerank_iteration(wedges, ranks, dangling_nodes, ...)``
-    over ``_pinned_checkpoint`` state — what the working tree executes.
+    over ``utils.repartition.pinned_checkpoint`` state — what the
+    working tree executes.
 Uses the same part↔supplier graph as the ``pagerank_parts`` registry
 query so the captured shapes are the bench's shapes.
 """
@@ -29,6 +30,9 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from datapipelines_essentials_python_spark import get_or_create_spark_session  # noqa: E402
 from datapipelines_essentials_python_spark.operators import graph  # noqa: E402
+from datapipelines_essentials_python_spark.utils.repartition import (  # noqa: E402
+    pinned_checkpoint,
+)
 import __spark_entry__ as entry_mod  # noqa: E402
 
 
@@ -48,11 +52,11 @@ def main() -> None:
     degrees = graph.out_degrees(edges).localCheckpoint(eager=True)
     ranks = graph.init_ranks(edges)
     if hasattr(graph, "_pagerank_iteration"):
-        wedges = graph._pinned_checkpoint(
+        wedges = pinned_checkpoint(
             edges.join(degrees.withColumnRenamed("node", "src"), "src", "left"),
             "src",
         )
-        ranks = graph._pinned_checkpoint(ranks, "node")
+        ranks = pinned_checkpoint(ranks, "node")
         dangling_nodes = (
             ranks.select("node")
             .join(degrees, "node", "left_anti")
@@ -62,7 +66,7 @@ def main() -> None:
             wedges, ranks, dangling_nodes,
             F.col("rank") / F.col("outdeg").cast("double"), 0.85,
         )
-        label = "NEW loop body (_pagerank_iteration over _pinned_checkpoint state)"
+        label = "NEW loop body (_pagerank_iteration over pinned_checkpoint state)"
     else:
         ranks = ranks.localCheckpoint(eager=True)
         step = graph.pagerank_step(ranks, edges, degrees)
