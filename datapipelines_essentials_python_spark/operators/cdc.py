@@ -20,10 +20,15 @@ Fixes over the reference, specced per SURVEY §7.5:
 - global-order dedup without partition keys (W2) funnels everything through
   one partition — allowed here but only via an explicit flag.
 
-Scale design: inserts and updates come out of ONE ``left`` join on the pks
-(a match marker tells unmatched rows from matched ones), so ``new`` is
-scanned and shuffled once and no Spark action runs until the caller writes
-or counts the result; the hash column is computed once at read time
+Scale design: inserts and updates come out of ONE window pass. History
+rows (tagged) and the new rows are unioned and partitioned on the pks, and
+window aggregates over that partition decide per new row whether it is an
+insert or an update, so the delta costs one shuffle (its
+``dropDuplicates`` rides the pk partitioning) and no broadcast. The
+snapshot of :func:`apply_cdc_pipeline` ranks the same tagged rows under the
+same partitioning, so it is one shuffle too and never re-runs the diff. No
+Spark action runs until the caller writes or counts a result. The hash
+column is computed once at read time
 (``io.readers.read_with_audit_columns``) so change detection never re-reads
 payload columns.
 """
@@ -67,6 +72,58 @@ def snapshot(
     return out if keep_row_number else out.drop(row_number_col)
 
 
+_NEW = "__cdc_new"
+_CHANGED = "__cdc_changed"
+
+
+def _flag_changes(
+    old: DataFrame,
+    new: DataFrame,
+    pk_cols: list[str],
+    order_cols: list[str] | None,
+    hash_col: str,
+) -> DataFrame:
+    """``old`` ∪ ``new`` tagged ``__cdc_new``, with ``__cdc_changed`` true
+    on every new row that is an insert or an update. One window over
+    ``partitionBy(pks)`` decides it:
+
+    - a new row with a NULL pk, or whose key has no old row, is an insert;
+    - with ``order_cols``, a matched row is an update when its hash differs
+      from the latest old row's (``max_by(hash, struct(order_cols))``);
+    - without, when any old hash of the key differs from it (the set of old
+      hashes is not empty once the new hash is removed);
+    - a NULL hash on either side compares as no change.
+    """
+    is_new = F.col(_NEW)
+    tagged = old.withColumn(_NEW, F.lit(False)).unionByName(
+        new.withColumn(_NEW, F.lit(True)), allowMissingColumns=True
+    )
+    w = Window.partitionBy(*pk_cols)
+    old_hash = F.when(~is_new, F.col(hash_col))
+    if order_cols:
+        latest = F.max_by(old_hash, F.when(~is_new, F.struct(*order_cols))).over(w)
+        differs = F.col(hash_col) != latest
+    else:
+        others = F.array_remove(F.collect_set(old_hash).over(w), F.col(hash_col))
+        differs = F.col(hash_col).isNotNull() & (F.size(others) > 0)
+    insert = ~F.bool_or(~is_new).over(w)
+    for c in pk_cols:
+        insert = insert | F.col(c).isNull()
+    return tagged.withColumn(
+        _CHANGED, is_new & (insert | F.coalesce(differs, F.lit(False)))
+    )
+
+
+def _changed_new_rows(flagged: DataFrame, new: DataFrame) -> DataFrame:
+    """The flagged inserts and updates as ``new``'s columns, de-duplicated.
+    A column the union widened is cast back to ``new``'s type."""
+    kept = flagged.where(F.col(_CHANGED))
+    kept_types = dict(kept.dtypes)
+    return kept.select(
+        *[F.col(c) if kept_types[c] == t else F.col(c).cast(t).alias(c) for c, t in new.dtypes]
+    ).dropDuplicates()
+
+
 def merge_cdc(
     old: DataFrame | None,
     new: DataFrame,
@@ -79,36 +136,21 @@ def merge_cdc(
 
     - ``old`` None → ``new.dropDuplicates()`` (initial-load shortcut,
       reference ``:57-60``, with the broken guard fixed); an empty ``old``
-      gives the same rows through the join;
-    - old side is first deduped to latest-per-pk when ``order_cols`` given
-      (reference ``:63-66``);
-    - one ``left`` join on the pks keeps the new rows with no match
-      (inserts) and the matched rows whose hashes differ (updates), then
-      ``dropDuplicates``. A matched key whose old hash is NULL is neither:
-      the unmatched test reads the match marker, not the old hash.
+      gives the same rows through the diff;
+    - with ``order_cols`` a new row is compared with the latest old row of
+      its key only (reference ``:63-66`` dedups the old side first);
+    - new rows with no old row on their key (inserts) and rows whose hash
+      differs (updates) are kept, then ``dropDuplicates``. A matched key
+      whose old hash is NULL is neither.
+
+    The diff is one window over the pk partitioning of ``old`` ∪ ``new``
+    (:func:`_flag_changes`): one shuffle, no join.
     """
     if old is None:
         return new.dropDuplicates()
-    if order_cols:
-        old = snapshot(old, pk_cols, order_cols)
-    old_keyed = old.select(
-        *[F.col(c).alias(f"__old_{c}") for c in pk_cols],
-        F.col(hash_col).alias("__old_hash"),
-        F.lit(True).alias("__old_matched"),
-    )
-    cond = None
-    for c in pk_cols:
-        clause = new[c] == old_keyed[f"__old_{c}"]
-        cond = clause if cond is None else (cond & clause)
-    return (
-        new.join(old_keyed, cond, "left")
-        .where(
-            old_keyed["__old_matched"].isNull()
-            | (new[hash_col] != old_keyed["__old_hash"])
-        )
-        .select(*[new[c] for c in new.columns])
-        .dropDuplicates()
-    )
+    keep = list(dict.fromkeys([*pk_cols, *(order_cols or []), hash_col]))
+    flagged = _flag_changes(old.select(*keep), new, pk_cols, order_cols, hash_col)
+    return _changed_new_rows(flagged, new)
 
 
 def apply_cdc_pipeline(
@@ -120,13 +162,24 @@ def apply_cdc_pipeline(
 ) -> tuple[DataFrame, DataFrame]:
     """Full reference CDC lifecycle (SURVEY §2.9): returns
     ``(delta_to_append, snapshot_view)`` where delta is the insert/update
-    set vs history and snapshot is latest-per-key over history ∪ delta."""
+    set vs history and snapshot is latest-per-key over history ∪ delta.
+
+    Both come from the same tagged rows of :func:`_flag_changes`: the
+    delta keeps the flagged new rows, the snapshot ranks history plus the
+    flagged new rows under the same pk partitioning, so each is one shuffle.
+    """
     incoming = with_hashcode(incoming, payload_cols)
-    if history is not None and "hashcode" not in history.columns:
+    if history is None:
+        delta = incoming.dropDuplicates()
+        return delta, snapshot(delta, pk_cols, order_cols)
+    if "hashcode" not in history.columns:
         history = with_hashcode(history, payload_cols)
-    delta = merge_cdc(history, incoming, pk_cols, order_cols)
-    full = delta if history is None else history.unionByName(delta, allowMissingColumns=True)
-    return delta, snapshot(full, pk_cols, order_cols)
+    flagged = _flag_changes(history, incoming, pk_cols, order_cols, "hashcode")
+    full = flagged.where(~F.col(_NEW) | F.col(_CHANGED))
+    return (
+        _changed_new_rows(flagged, incoming),
+        snapshot(full, pk_cols, order_cols).drop(_NEW, _CHANGED),
+    )
 
 
 def scd2_merge(

@@ -17,6 +17,14 @@ Everything here emits ``Column`` objects. The generated plan is:
 which Catalyst sees as one declarative tree: filters push to the scans,
 projections prune columns at the parquet reader, and join order/strategy
 stay optimizer-owned.
+
+``compile()`` then stages that plan: one eager ``localCheckpoint()`` runs it
+once and keeps the rows in the executors' block managers. Every consumer of
+a landing batch (CDC, DQ rules, each write) reads the staged rows instead
+of re-running the scans, joins and aggregates, and can no longer see a
+source file change or vanish between two of them. The staged blocks live
+as long as the returned DataFrame: Spark frees them when it is
+garbage-collected.
 """
 
 from __future__ import annotations
@@ -27,7 +35,7 @@ from pyspark.sql import functions as F
 from datapipelines_essentials_python_spark.errors import MetadataValidationError
 from datapipelines_essentials_python_spark.expr.filter_dsl import compile_filter
 from datapipelines_essentials_python_spark.expr.registry import resolve_function
-from datapipelines_essentials_python_spark.io.readers import read_data
+from datapipelines_essentials_python_spark.io.readers import read_data, resolve_format
 from datapipelines_essentials_python_spark.plans.datamodel import DataModel
 from datapipelines_essentials_python_spark.plans.join_planner import execute_joins, plan_joins
 from datapipelines_essentials_python_spark.plans.metadata import ColumnSpec, TableSpec
@@ -71,7 +79,7 @@ def compile_column(spec: ColumnSpec) -> Column:
 
 
 class PipelineCompiler:
-    """Compile (TableSpecs, DataModel, main table) → a single DataFrame plan."""
+    """Compile (TableSpecs, DataModel, main table) → one staged DataFrame."""
 
     def __init__(
         self,
@@ -93,7 +101,10 @@ class PipelineCompiler:
     def read_sources(self, overrides: dict[str, DataFrame] | None = None) -> dict[str, DataFrame]:
         """Bind each TableSpec to a DataFrame (parity: readSourceFilesIntoDF,
         MetaModel.py:251-275). ``overrides`` lets tests/callers inject
-        pre-built DataFrames instead of paths."""
+        pre-built DataFrames instead of paths. A spec's ``schema`` is passed
+        to the reader; for CSV, ``enforceSchema`` defaults to false so a
+        header that does not match the schema's names fails the read
+        instead of landing columns by position."""
         out: dict[str, DataFrame] = {}
         for name, spec in self.tables.items():
             if overrides and name in overrides:
@@ -101,8 +112,11 @@ class PipelineCompiler:
             else:
                 if not spec.path:
                     raise MetadataValidationError(f"table {name!r} has no path and no override")
+                options = spec.options
+                if spec.schema and resolve_format(spec.filetype) == "csv":
+                    options = {"enforceSchema": "false", **options}
                 out[name] = read_data(
-                    self.spark, spec.filetype, spec.path, options=spec.options
+                    self.spark, spec.filetype, spec.path, schema=spec.schema, options=options
                 )
         return out
 
@@ -161,7 +175,13 @@ class PipelineCompiler:
 
     # -- full pipeline ------------------------------------------------------
     def compile(self, overrides: dict[str, DataFrame] | None = None) -> DataFrame:
-        """read → project → join fold → aggregate → HAVING, one lazy plan."""
+        """read → project → join fold → aggregate → HAVING, run once.
+
+        The plan is staged by an eager ``localCheckpoint()``, which runs it
+        once: the returned DataFrame reads the staged rows, so callers that
+        use it several times do not re-read the sources. Its blocks are
+        freed when the DataFrame is garbage-collected.
+        """
         sources = self.read_sources(overrides)
         steps: list = []
         join_keys: dict[str, set[str]] = {name: set() for name in self.tables}
@@ -203,7 +223,7 @@ class PipelineCompiler:
                 f"{sorted(c for c, n in seen_counts.items() if n > 1)}"
             )
         joined = joined.select(*[F.col(s.target_col) for s in all_specs])
-        return self.aggregate(joined, all_specs)
+        return self.aggregate(joined, all_specs).localCheckpoint(eager=True)
 
 
 def _jk(table: str, col: str) -> str:

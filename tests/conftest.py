@@ -9,7 +9,9 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    return get_or_create_spark_session(app_name="tests", shuffle_partitions=8)
+    session = get_or_create_spark_session(app_name="tests", shuffle_partitions=8)
+    yield session
+    session.stop()
 
 
 @pytest.fixture(scope="session")

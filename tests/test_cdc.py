@@ -1,7 +1,9 @@
 """Hash-diff CDC (SURVEY §2.9) including the reference's broken-guard fixes."""
 
+import random
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from datapipelines_essentials_python_spark.operators.cdc import (
@@ -153,3 +155,139 @@ def test_empty_history_returns_new_deduplicated(spark):
         map(tuple, new.dropDuplicates().collect())
     )
     assert got.count() == 2
+
+
+def test_delta_keeps_the_new_side_types(spark):
+    # the union with history widens int to bigint; the delta stays int
+    old = spark.createDataFrame([(1, "h1"), (2, "h2")], "id bigint, hashcode string")
+    new = spark.createDataFrame([(2, "h9"), (3, "h3")], "id int, hashcode string")
+    out = merge_cdc(old, new, ["id"])
+    assert out.dtypes == new.dtypes
+    assert sorted(tuple(r) for r in out.collect()) == [(2, "h9"), (3, "h3")]
+
+
+def _initial_plan(df):
+    """The physical plan Spark starts from (AQE's initial plan, before it
+    runs), as text."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_cdc_outputs_are_one_shuffle_each(spark):
+    history = _df(spark, [(1, "a", 1), (2, "b", 1), (2, "b", 0)])
+    incoming = _df(spark, [(2, "b2", 2), (3, "c", 2)])
+    delta, snap = apply_cdc_pipeline(
+        history, incoming, ["id"], ["ver"], payload_cols=["id", "val"]
+    )
+    old = with_hashcode(history, ["id", "val"])
+    new = with_hashcode(incoming, ["id", "val"])
+    for df in (delta, snap, merge_cdc(old, new, ["id"]), merge_cdc(old, new, ["id"], ["ver"])):
+        plan = _initial_plan(df)
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+        assert "BroadcastExchange" not in plan, plan
+
+
+# -- equivalence with a pure-Python reference ---------------------------------
+
+_ROW = "k1 int, k2 string, val string, ver int"
+
+
+def _random_rows(rng, n, vers):
+    """``n`` rows over small key/value domains (so keys repeat and payloads
+    collide), NULL pks sprinkled in, one distinct ``ver`` each."""
+    def maybe_null(v):
+        return None if rng.random() < 0.1 else v
+
+    return [
+        (maybe_null(rng.randint(1, 6)), maybe_null(rng.choice("xy")),
+         rng.choice(["a", "b", None]), vers.pop())
+        for _ in range(n)
+    ]
+
+
+def _ref_merge(old, new, pk, order):
+    """Inserts + updates by the reference's definition, row by row; the
+    hash is each row's last field."""
+    def key(r):
+        return tuple(r[i] for i in pk)
+
+    by_key = {}
+    for r in old:
+        by_key.setdefault(key(r), []).append(r)
+    if order is not None:
+        by_key = {k: [max(rs, key=lambda r: r[order])] for k, rs in by_key.items()}
+    out = set()
+    for r in new:
+        matches = by_key.get(key(r), [])
+        if None in key(r) or not matches:
+            out.add(r)
+        elif r[-1] is not None and any(o[-1] is not None and o[-1] != r[-1] for o in matches):
+            out.add(r)
+    return out
+
+
+def _ref_snapshot(rows, pk, order):
+    latest = {}
+    for r in rows:
+        k = tuple(r[i] for i in pk)
+        if k not in latest or r[order] > latest[k][order]:
+            latest[k] = r
+    return set(latest.values())
+
+
+def _hashed(rows, rng):
+    """``rows`` with an explicit hash of ``val`` (equal values share a
+    hash), a few of them NULL."""
+    return [(*r, None if rng.random() < 0.1 else f"h{r[2]}") for r in rows]
+
+
+@pytest.mark.parametrize("pk_cols", [["k1"], ["k1", "k2"]])
+@pytest.mark.parametrize("order_cols", [None, ["ver"]])
+def test_merge_cdc_matches_python_reference(spark, pk_cols, order_cols):
+    cols = ["k1", "k2", "val", "ver", "hashcode"]
+    pk = [cols.index(c) for c in pk_cols]
+    order = cols.index("ver") if order_cols else None
+    for seed in range(4):
+        rng = random.Random(seed)
+        vers = rng.sample(range(1000), 60)
+        old = _hashed(_random_rows(rng, 30, vers), rng)
+        new = _hashed(_random_rows(rng, 20, vers), rng)
+        schema = f"{_ROW}, hashcode string"
+        got = merge_cdc(
+            spark.createDataFrame(old, schema), spark.createDataFrame(new, schema),
+            pk_cols, order_cols,
+        ).collect()
+        want = _ref_merge(old, new, pk, order)
+        assert sorted(map(tuple, got), key=repr) == sorted(want, key=repr), seed
+
+
+@pytest.mark.parametrize("pk_cols", [["k1"], ["k1", "k2"]])
+def test_apply_cdc_pipeline_matches_python_reference(spark, pk_cols):
+    cols = ["k1", "k2", "val", "ver", "hashcode"]
+    pk = [cols.index(c) for c in pk_cols]
+    payload = ["k1", "k2", "val"]
+    for seed in range(4):
+        rng = random.Random(100 + seed)
+        vers = rng.sample(range(1000), 60)
+        # history carries the hashes with_hashcode gives its payload, some
+        # blanked to NULL; incoming is hashed by the pipeline itself
+        history = [
+            (*r[:4], None if rng.random() < 0.1 else r[4])
+            for r in with_hashcode(
+                spark.createDataFrame(_random_rows(rng, 30, vers), _ROW), payload
+            ).collect()
+        ]
+        incoming = _random_rows(rng, 20, vers)
+        hashed_in = [
+            tuple(r)
+            for r in with_hashcode(spark.createDataFrame(incoming, _ROW), payload).collect()
+        ]
+        delta, snap = apply_cdc_pipeline(
+            spark.createDataFrame(history, f"{_ROW}, hashcode string"),
+            spark.createDataFrame(incoming, _ROW), pk_cols, ["ver"], payload_cols=payload,
+        )
+        want_delta = _ref_merge(history, hashed_in, pk, 3)
+        got_delta = [tuple(r) for r in delta.collect()]
+        assert sorted(got_delta, key=repr) == sorted(want_delta, key=repr), seed
+        want_snap = _ref_snapshot(history + sorted(want_delta, key=repr), pk, 3)
+        got_snap = [tuple(r) for r in snap.collect()]
+        assert sorted(got_snap, key=repr) == sorted(want_snap, key=repr), seed

@@ -174,3 +174,101 @@ def test_datamodel_from_csv(tmp_path):
     steps = plan_joins(model, "purchase")
     assert {(s.table, s.how) for s in steps} == {("product", "left"), ("store", "inner")}
     assert model.tables["purchase"].fks[0].pk_cols == ("id",)
+
+
+def _landing_batch(tmp_path, orders_header="o_key,o_status,o_prio,ver"):
+    """Two landing CSVs (orders + lineitems) and the specs that compile them
+    into one row per order with its summed quantity."""
+    (tmp_path / "orders.csv").write_text(
+        f"{orders_header}\n1,O,HIGH,2\n2,F,,2\n3,O,LOW,2\n4,X,LOW,2\n"
+    )
+    (tmp_path / "lineitem.csv").write_text(
+        "l_key,l_line,l_qty\n1,1,5\n1,2,3\n2,1,7\n3,1,0\n3,2,4\n4,1,1\n"
+    )
+    csv = {"header": "true"}
+    orders = TableSpec(
+        "orders", "csv", str(tmp_path / "orders.csv"), csv,
+        columns=[
+            ColumnSpec("orders", "o_key", "o_key", target_type="bigint", is_pk=True),
+            ColumnSpec("orders", "o_status", "o_status", filter="in('F','O')"),
+            ColumnSpec("orders", "o_prio", "o_prio"),
+            ColumnSpec("orders", "ver", "ver", target_type="int"),
+        ],
+        schema="o_key bigint, o_status string, o_prio string, ver int",
+    )
+    lineitem = TableSpec(
+        "lineitem", "csv", str(tmp_path / "lineitem.csv"), csv,
+        columns=[
+            ColumnSpec("lineitem", "l_qty", "qty", target_type="bigint",
+                       aggregator="sum", filter="gte(1)"),
+        ],
+        schema="l_key bigint, l_line int, l_qty bigint",
+    )
+    model = DataModel()
+    model.add_table("orders", ["o_key"])
+    model.add_table("lineitem", ["l_key", "l_line"])
+    model.add_fk("lineitem", "orders", ["l_key"], ["o_key"], "inner")
+    return [lineitem, orders], model
+
+
+def test_csv_schema_reads_typed_columns(spark, tmp_path):
+    specs, model = _landing_batch(tmp_path)
+    out = PipelineCompiler(spark, specs, model, main_table="lineitem").compile()
+    assert dict(out.dtypes)["qty"] == "bigint"
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, "O", "HIGH", 2, 8), (2, "F", None, 2, 7), (3, "O", "LOW", 2, 4),
+    ]
+
+
+def test_csv_schema_rejects_reordered_header(spark, tmp_path):
+    # a CSV schema maps columns by position: without the header check this
+    # batch would land o_status values as priorities and the reverse
+    specs, model = _landing_batch(tmp_path, orders_header="o_key,o_prio,o_status,ver")
+    with pytest.raises(Exception, match="CSV header does not conform to the schema"):
+        PipelineCompiler(spark, specs, model, main_table="lineitem").compile()
+
+
+def test_compiled_batch_outlives_its_sources(spark, tmp_path):
+    from datapipelines_essentials_python_spark.dq.engine import execute_rules
+    from datapipelines_essentials_python_spark.dq.rules import DQConfig, Rule
+    from datapipelines_essentials_python_spark.io.writers import write_data
+    from datapipelines_essentials_python_spark.operators.cdc import apply_cdc_pipeline
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    specs, model = _landing_batch(landing)
+    staged = PipelineCompiler(spark, specs, model, main_table="lineitem").compile()
+    # the same rows, built without the compiler: the reference answers
+    reference = spark.createDataFrame(staged.collect(), staged.schema)
+    for csv_file in landing.iterdir():
+        csv_file.unlink()
+
+    history = spark.createDataFrame(
+        [(1, "O", "HIGH", 1, 8), (2, "F", "LOW", 1, 7), (9, "O", "LOW", 1, 1)],
+        "o_key bigint, o_status string, o_prio string, ver int, qty bigint",
+    )
+    config = DQConfig(dq_id="t", rules=[
+        Rule("nn", "prio present", "not null", columns=("o_prio",)),
+        Rule("uk", "one row per order", "unique", columns=("o_key",)),
+        Rule("q", "no empty order", "query", query="select * from temp where qty < 1"),
+    ])
+
+    def run(batch, out):
+        _, results = execute_rules(spark, batch, config)
+        delta, snap = apply_cdc_pipeline(
+            history, batch, ["o_key"], ["ver"], payload_cols=["o_status", "o_prio", "qty"]
+        )
+        write_data(delta, "parquet", str(out / "delta"))
+        write_data(snap, "parquet", str(out / "snapshot"))
+        return (
+            [r.violation_count for r in results],
+            sorted(tuple(r) for r in spark.read.parquet(str(out / "delta")).collect()),
+            sorted(tuple(r) for r in spark.read.parquet(str(out / "snapshot")).collect()),
+        )
+
+    got = run(staged, tmp_path / "staged")
+    assert got == run(reference, tmp_path / "reference")
+    dq, delta, snap = got
+    assert dq == [1, 0, 0]
+    assert [r[0] for r in delta] == [2, 3]  # 2 changed its priority, 3 is new
+    assert [r[0] for r in snap] == [1, 2, 3, 9]

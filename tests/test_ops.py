@@ -60,8 +60,17 @@ def test_execution_pool_success_and_failure():
 
 
 def test_init_logging_returns_logger():
-    log = init_logging("INFO")
-    assert log.name == "datapipelines_essentials_python_spark"
+    root = logging.getLogger()
+    handlers, level = root.handlers[:], root.level
+    try:
+        log = init_logging("INFO")
+        assert log.name == "datapipelines_essentials_python_spark"
+    finally:
+        # the console handler writes to this test's captured stderr, which
+        # pytest closes; left on the root logger, py4j's INFO lines at
+        # interpreter exit hit it as "--- Logging error ---"
+        root.handlers[:] = handlers
+        root.setLevel(level)
 
 
 def test_audit_action(caplog):
