@@ -54,12 +54,6 @@ _SUPPORTED = {
 }
 
 
-def resolve_format(filetype: str) -> str:
-    """The Spark format name ``filetype`` dispatches to (aliases resolved)."""
-    fmt = filetype.strip().lower()
-    return _FORMAT_ALIASES.get(fmt, fmt)
-
-
 def read_data(
     spark: SparkSession,
     filetype: str,
@@ -76,7 +70,7 @@ def read_data(
     Raises :class:`UnknownFileTypeError` for unsupported filetypes — same
     contract as the reference (``spark.py:99-102``).
     """
-    fmt = resolve_format(filetype)
+    fmt = _FORMAT_ALIASES.get(filetype.strip().lower(), filetype.strip().lower())
     if fmt not in _SUPPORTED:
         raise UnknownFileTypeError(
             f"unsupported filetype {filetype!r}; expected one of {sorted(_SUPPORTED)}"

@@ -25,8 +25,11 @@ rows (tagged) and the new rows are unioned and partitioned on the pks, and
 window aggregates over that partition decide per new row whether it is an
 insert or an update, so the delta costs one shuffle (its
 ``dropDuplicates`` rides the pk partitioning) and no broadcast. The
-snapshot of :func:`apply_cdc_pipeline` ranks the same tagged rows under the
-same partitioning, so it is one shuffle too and never re-runs the diff. No
+delta's pass sees history projected to pks, order columns and hash, so
+its shuffle moves no history payload. The snapshot of
+:func:`apply_cdc_pipeline` needs every history column anyway: it runs the
+same window over full-width history and ranks the tagged rows under the
+same partitioning, so it is one shuffle too and never joins. No
 Spark action runs until the caller writes or counts a result. The hash
 column is computed once at read time
 (``io.readers.read_with_audit_columns``) so change detection never re-reads
@@ -114,16 +117,6 @@ def _flag_changes(
     )
 
 
-def _changed_new_rows(flagged: DataFrame, new: DataFrame) -> DataFrame:
-    """The flagged inserts and updates as ``new``'s columns, de-duplicated.
-    A column the union widened is cast back to ``new``'s type."""
-    kept = flagged.where(F.col(_CHANGED))
-    kept_types = dict(kept.dtypes)
-    return kept.select(
-        *[F.col(c) if kept_types[c] == t else F.col(c).cast(t).alias(c) for c, t in new.dtypes]
-    ).dropDuplicates()
-
-
 def merge_cdc(
     old: DataFrame | None,
     new: DataFrame,
@@ -150,7 +143,12 @@ def merge_cdc(
         return new.dropDuplicates()
     keep = list(dict.fromkeys([*pk_cols, *(order_cols or []), hash_col]))
     flagged = _flag_changes(old.select(*keep), new, pk_cols, order_cols, hash_col)
-    return _changed_new_rows(flagged, new)
+    kept = flagged.where(F.col(_CHANGED))
+    # a column the union widened is cast back to ``new``'s type
+    kept_types = dict(kept.dtypes)
+    return kept.select(
+        *[F.col(c) if kept_types[c] == t else F.col(c).cast(t).alias(c) for c, t in new.dtypes]
+    ).dropDuplicates()
 
 
 def apply_cdc_pipeline(
@@ -164,9 +162,11 @@ def apply_cdc_pipeline(
     ``(delta_to_append, snapshot_view)`` where delta is the insert/update
     set vs history and snapshot is latest-per-key over history ∪ delta.
 
-    Both come from the same tagged rows of :func:`_flag_changes`: the
-    delta keeps the flagged new rows, the snapshot ranks history plus the
-    flagged new rows under the same pk partitioning, so each is one shuffle.
+    The delta is :func:`merge_cdc`, whose window sees history projected to
+    pks, order columns and hash. The snapshot runs the same window
+    (:func:`_flag_changes`) over full-width history and ranks history plus
+    the flagged new rows under the same pk partitioning. Each is one
+    shuffle.
     """
     incoming = with_hashcode(incoming, payload_cols)
     if history is None:
@@ -174,12 +174,10 @@ def apply_cdc_pipeline(
         return delta, snapshot(delta, pk_cols, order_cols)
     if "hashcode" not in history.columns:
         history = with_hashcode(history, payload_cols)
+    delta = merge_cdc(history, incoming, pk_cols, order_cols)
     flagged = _flag_changes(history, incoming, pk_cols, order_cols, "hashcode")
     full = flagged.where(~F.col(_NEW) | F.col(_CHANGED))
-    return (
-        _changed_new_rows(flagged, incoming),
-        snapshot(full, pk_cols, order_cols).drop(_NEW, _CHANGED),
-    )
+    return delta, snapshot(full, pk_cols, order_cols).drop(_NEW, _CHANGED)
 
 
 def scd2_merge(

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from datapipelines_essentials_python_spark.errors import MetadataValidationError
 from datapipelines_essentials_python_spark.expr.filter_dsl import compile_filter
 from datapipelines_essentials_python_spark.expr.registry import resolve_function
-from datapipelines_essentials_python_spark.io.readers import read_data, resolve_format
+from datapipelines_essentials_python_spark.io.readers import read_data
 from datapipelines_essentials_python_spark.plans.datamodel import DataModel
 from datapipelines_essentials_python_spark.plans.join_planner import execute_joins, plan_joins
 from datapipelines_essentials_python_spark.plans.metadata import ColumnSpec, TableSpec
@@ -101,10 +101,7 @@ class PipelineCompiler:
     def read_sources(self, overrides: dict[str, DataFrame] | None = None) -> dict[str, DataFrame]:
         """Bind each TableSpec to a DataFrame (parity: readSourceFilesIntoDF,
         MetaModel.py:251-275). ``overrides`` lets tests/callers inject
-        pre-built DataFrames instead of paths. A spec's ``schema`` is passed
-        to the reader; for CSV, ``enforceSchema`` defaults to false so a
-        header that does not match the schema's names fails the read
-        instead of landing columns by position."""
+        pre-built DataFrames instead of paths."""
         out: dict[str, DataFrame] = {}
         for name, spec in self.tables.items():
             if overrides and name in overrides:
@@ -112,11 +109,8 @@ class PipelineCompiler:
             else:
                 if not spec.path:
                     raise MetadataValidationError(f"table {name!r} has no path and no override")
-                options = spec.options
-                if spec.schema and resolve_format(spec.filetype) == "csv":
-                    options = {"enforceSchema": "false", **options}
                 out[name] = read_data(
-                    self.spark, spec.filetype, spec.path, schema=spec.schema, options=options
+                    self.spark, spec.filetype, spec.path, options=spec.options
                 )
         return out
 

@@ -67,14 +67,7 @@ class ColumnSpec:
 
 @dataclass
 class TableSpec:
-    """Per-source-table spec: where to read it and its column mappings.
-
-    ``schema`` is an optional DDL string (``"a bigint, b string"``) the
-    source is read with, which spares Spark the job that reads a CSV
-    header or infers a schema. A CSV schema maps columns by position; the
-    compiler keeps Spark's check of the header names against it
-    (``enforceSchema=false``) unless ``options`` say otherwise.
-    """
+    """Per-source-table spec: where to read it and its column mappings."""
 
     name: str
     filetype: str = "parquet"
@@ -82,7 +75,6 @@ class TableSpec:
     options: dict[str, str] = field(default_factory=dict)
     order: int = 0
     columns: list[ColumnSpec] = field(default_factory=list)
-    schema: str | None = None
 
     @property
     def pk_columns(self) -> list[str]:

@@ -186,6 +186,24 @@ def test_cdc_outputs_are_one_shuffle_each(spark):
         assert "BroadcastExchange" not in plan, plan
 
 
+def test_delta_reads_only_history_keys_order_and_hash(spark, tmp_path):
+    # the delta's window needs no history payload, so its shuffle moves
+    # none; the snapshot keeps every history column
+    path = str(tmp_path / "history")
+    with_hashcode(_df(spark, [(1, "a", 1), (2, "b", 1)]), ["id", "val"]).write.parquet(path)
+    incoming = _df(spark, [(2, "b2", 2), (3, "c", 2)])
+    delta, snap = apply_cdc_pipeline(
+        spark.read.parquet(path), incoming, ["id"], ["ver"], payload_cols=["id", "val"]
+    )
+
+    def history_read_schema(df):
+        [scan] = [line for line in _initial_plan(df).splitlines() if "FileScan" in line]
+        return scan.split("ReadSchema: ")[1]
+
+    assert history_read_schema(delta) == "struct<id:int,ver:int,hashcode:string>"
+    assert history_read_schema(snap) == "struct<id:int,val:string,ver:int,hashcode:string>"
+
+
 # -- equivalence with a pure-Python reference ---------------------------------
 
 _ROW = "k1 int, k2 string, val string, ver int"
