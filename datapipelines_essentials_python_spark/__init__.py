@@ -18,7 +18,6 @@ reference repo ``vim89/datapipelines-essentials-python`` (see SURVEY.md):
 - LLM-training-data operators designed for 100 TB scale
   (``operators.dedup``, ``operators.similarity``, ``operators.text``,
   ``operators.multimodal``)
-- Structured Streaming upgrade path for CDC (``streaming``)
 
 Design stance (SURVEY.md §7): DataFrame/SQL only; no monkey-patching; no
 string-built SQL; Python UDFs only as Arrow-vectorized ``pandas_udf`` /

@@ -21,6 +21,7 @@ unique or query rule.
 
 from __future__ import annotations
 
+import uuid
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,13 +46,15 @@ def execute_rules(
     Every 1-row aggregate is keyed by rule position, not ``rule_id``, so
     rules that share an id still get a result each.
 
-    Query rules read the batch as the temp view ``temp``, for the duration
-    of the call only: it is registered (replacing any view of that name)
-    when the config has a query rule and dropped before returning.
+    Query rules read the batch as ``temp``: a CTE of that name over a view
+    registered under a per-call name, so neither a caller's own ``temp``
+    view nor a concurrent call on the same session is touched. The view is
+    dropped before returning.
     """
     kinds = [r.rule_type.strip().lower() for r in config.rules]
+    view = f"__dq_{uuid.uuid4().hex}"
     if "query" in kinds:
-        df.createOrReplaceTempView("temp")
+        df.createOrReplaceTempView(view)
     try:
         # each part is one (key, counts) row; key 0 is the fused aggregate
         # [total, one count per not-null rule], key i the unique or query rule
@@ -77,14 +80,18 @@ def execute_rules(
                     )
                 )
             else:
-                part = spark.sql(r.query).agg(F.lit(i), F.array(F.count(F.lit(1))))
+                # a statement's trailing ``;`` is not legal in a subquery, and
+                # the newlines keep a trailing ``--`` comment off the ``)``
+                rule_sql = r.query.rstrip("; \t\r\n")
+                query = f"WITH temp AS (SELECT * FROM {view}) SELECT * FROM (\n{rule_sql}\n)"
+                part = spark.sql(query).agg(F.lit(i), F.array(F.count(F.lit(1))))
             parts.append(part)
             slots.append((i, 0))
         parts.insert(0, df.agg(F.lit(0), F.array(*fused)))
         counts = dict(reduce(DataFrame.union, parts).collect())
     finally:
         if "query" in kinds:
-            spark.catalog.dropTempView("temp")
+            spark.catalog.dropTempView(view)
 
     total = counts[0][0]
     results = []

@@ -2,8 +2,8 @@
 
 The reference *documents* these as DataFrame/Column extensions
 (``docs/APIDOC.MD:60-230``: single_space, remove_all_whitespace, anti_trim,
-remove_non_word_characters, multi_equals, isFalsy/isTruthy, ...) but never
-implements them in ``src/``. Implemented here as real native expressions.
+remove_non_word_characters, multi_equals, ...) but never implements them
+in ``src/``. Implemented here as real native expressions.
 """
 
 from __future__ import annotations
@@ -43,13 +43,3 @@ def multi_equals(value: object, *cols: Column | str) -> Column:
     if pred is None:
         raise ValueError("multi_equals needs at least one column")
     return pred
-
-
-def is_falsy(col: Column | str) -> Column:
-    """NULL or false (APIDOC isFalsy)."""
-    c = _as_col(col)
-    return c.isNull() | (c == F.lit(False))
-
-
-def is_truthy(col: Column | str) -> Column:
-    return ~is_falsy(col)

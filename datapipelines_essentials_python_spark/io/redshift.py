@@ -10,8 +10,9 @@ code of its own. The engine-side surface that actually matters is:
    present, then space-joined);
 2. the staging flow — Spark writes the DataFrame to S3 (parquet/CSV via
    ``io.writers``), then the warehouse ingests it with COPY over a JDBC
-   connection (``io.writers.write_jdbc_partitioned`` handles the pure-JDBC
-   fallback when no S3 stage is available).
+   connection (``io.writers.write_data(df, "jdbc", options={...,
+   "numPartitions": n})`` handles the pure-JDBC fallback when no S3 stage
+   is available).
 
 Scale note: COPY-from-S3 is the only sane path at 100 TB — the database
 pulls the staged files in parallel; pushing rows through JDBC INSERTs is a

@@ -72,23 +72,3 @@ def write_data(
         if not location:
             raise ValueError(f"sink {fmt!r} requires a path in `location`")
         writer.format(fmt).save(location)
-
-
-def write_jdbc_partitioned(
-    df: DataFrame,
-    url: str,
-    table: str,
-    num_partitions: int,
-    mode: str = "overwrite",
-    options: dict[str, Any] | None = None,
-) -> None:
-    """JDBC sink with explicit write parallelism.
-
-    Parity with ``write_dataframe_to_postgres``
-    (``clinical_trial_etl.py:53-66``) which repartitions to
-    executors × cores before saving; here the equivalent is the JDBC
-    ``numPartitions`` option (each partition becomes one DB connection).
-    """
-    opts = {"url": url, "dbtable": table, "numPartitions": str(num_partitions)}
-    opts.update({str(k): str(v) for k, v in (options or {}).items()})
-    df.write.mode(mode).format("jdbc").options(**opts).save()

@@ -41,23 +41,6 @@ def exact_dedup(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     return df.dropDuplicates(columns) if columns else df.dropDuplicates()
 
 
-def exact_dedup_keep_first(
-    df: DataFrame, key_cols: list[str], order_cols: list[str]
-) -> DataFrame:
-    """Deterministic exact dedup: keep the FIRST row per key under
-    ascending ``order_cols`` (window row_number=1) — the ascending twin of
-    ``cdc.snapshot`` (which keeps the latest row under descending order).
-    """
-    from pyspark.sql import Window
-
-    win = Window.partitionBy(*key_cols).orderBy(*[F.asc(c) for c in order_cols])
-    return (
-        df.withColumn("__rn", F.row_number().over(win))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
 def release(df: DataFrame) -> None:
     """Unpersist the intermediates a pair-generator persisted for ``df``.
 

@@ -1125,8 +1125,7 @@ def edge_support(
     closing = oriented.select(F.col("src").alias("a"), F.col("dst").alias("c"))
     tri = wedges.join(closing, ["a", "c"])
     # one pass over ``tri`` emits its three sides: a 3-way union would
-    # run the wedge join three times, and nest three copies of the
-    # previous round's plan per round in a lazy ktruss
+    # run the wedge join three times
     sides = tri.select(
         F.explode(
             F.array(
@@ -1151,7 +1150,6 @@ def ktruss(
     edges: DataFrame,
     k: int,
     max_rounds: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """k-truss subgraph by iterative support peeling (Cohen, 2008): drop
     every edge in fewer than ``k − 2`` triangles, recount support on the
@@ -1186,19 +1184,15 @@ def ktruss(
         raise ValueError(f"ktruss needs max_rounds >= 1, got {max_rounds}")
     thresh = k - 2
 
-    cur = undirected_edges(edges)
-    if materialize:
-        cur = cur.localCheckpoint(eager=True)
+    cur = undirected_edges(edges).localCheckpoint(eager=True)
     # loop state is canonical (u < v, distinct, pinned) by construction,
     # so every edge_support call runs with assume_normalized, and the
     # previous round's kept count IS this round's size
     n_cur = cur.count()
     for _ in range(max_rounds):
-        sup = edge_support(cur, materialize=materialize, assume_normalized=True)
-        if materialize:
-            # ``sup`` feeds the kept filter, its count, the next round's
-            # wedges and possibly the fixpoint return
-            sup = sup.localCheckpoint(eager=True)
+        # ``sup`` feeds the kept filter, its count, the next round's
+        # wedges and possibly the fixpoint return
+        sup = edge_support(cur, assume_normalized=True).localCheckpoint(eager=True)
         kept = sup.where(F.col("support") >= thresh)
         # 1-row scalar action — the convergence test (same discipline as
         # kcore); reads checkpointed state, not re-derived lineage.
@@ -1207,7 +1201,7 @@ def ktruss(
             # fixpoint: no edge peeled, so ``sup`` is the final support
             return sup
         cur, n_cur = kept, n_kept
-    return edge_support(cur, materialize=materialize, assume_normalized=True)
+    return edge_support(cur, assume_normalized=True)
 
 
 def adamic_adar(

@@ -1,8 +1,8 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Beyond-reference surface (driver mandate): treat media as opaque ``binary``
-columns with typed metadata; decode / feature-extract / resize /
-frame-sample run as Arrow-batched Pandas functions over ``mapInPandas``.
+columns with typed metadata; decode / feature-extract and text chunking
+run as Arrow-batched Pandas functions over ``mapInPandas``.
 
 The container has no image/audio libraries, so the *decode kernels* are
 stubbed exactly as mandated: ``decode_media`` raises ``NotImplementedError``
@@ -115,23 +115,6 @@ def extract_features(
     return df.mapInPandas(_run, schema=FEATURES_SCHEMA)
 
 
-def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: one output row per frame timestamp via
-    a generator expression (no decode). Pairs with a decoder kernel that
-    seeks to ``frame_ts_ms``. Demonstrates the explode-side of multimodal
-    processing without codecs."""
-    return df.where(F.col("media_type") == "video").select(
-        "media_id",
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.greatest(F.coalesce(F.col("duration_ms"), F.lit(0)) - 1, F.lit(0)),
-                F.lit(every_ms),
-            )
-        ).alias("frame_ts_ms"),
-    )
-
-
 def documents_as_media(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Adapter used by tests/bench: wrap the driver ``documents`` table as
     fake media rows (utf-8 payload bytes) matching MEDIA_SCHEMA."""
@@ -204,83 +187,3 @@ def chunk_text_media(
     return df.select(F.col(id_col), F.col(text_col)).mapInPandas(
         _run, schema=CHUNKS_SCHEMA
     )
-
-
-def parse_image_header(content: bytes) -> tuple[str, int, int]:
-    """Extract (format, width, height) from raw image bytes by parsing the
-    container header directly — PNG's IHDR chunk and JPEG's SOFn marker —
-    with NO codec library: dimension metadata lives in the first bytes of
-    the file, so corpus-wide image profiling never needs to decode pixels.
-
-    Returns ("unknown", 0, 0) for unrecognized/truncated payloads (never
-    raises — corrupt members must not kill a 100 TB scan).
-    """
-    try:
-        if content[:8] == b"\x89PNG\r\n\x1a\n" and content[12:16] == b"IHDR":
-            w = int.from_bytes(content[16:20], "big")
-            h = int.from_bytes(content[20:24], "big")
-            return ("png", w, h)
-        if content[:2] == b"\xff\xd8":  # JPEG SOI
-            i = 2
-            n = len(content)
-            while i + 9 < n:
-                if content[i] != 0xFF:
-                    break
-                # skip 0xFF fill bytes: the spec allows any number of
-                # padding 0xFFs before a marker byte, so advance to the
-                # first non-FF (otherwise the pad byte is misread as the
-                # marker and a bogus seg_len is consumed)
-                while i + 9 < n and content[i + 1] == 0xFF:
-                    i += 1
-                marker = content[i + 1]
-                if marker == 0xDA or marker == 0xD9:
-                    break  # SOS (entropy data follows) / EOI: no SOF seen
-                if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-                    i += 2
-                    continue
-                seg_len = int.from_bytes(content[i + 2 : i + 4], "big")
-                # SOF0-SOF15 except DHT/JPG/DAC carry dimensions
-                if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                    h = int.from_bytes(content[i + 5 : i + 7], "big")
-                    w = int.from_bytes(content[i + 7 : i + 9], "big")
-                    return ("jpeg", w, h)
-                i += 2 + seg_len
-        if content[:4] == b"RIFF" and content[8:12] == b"WEBP":
-            return ("webp", 0, 0)  # dims live in per-codec chunks; format only
-    except (IndexError, ValueError):  # pragma: no cover — malformed tails
-        pass
-    return ("unknown", 0, 0)
-
-
-def image_header_stats(
-    df: DataFrame, id_col: str = "media_id", content_col: str = "content"
-) -> DataFrame:
-    """Corpus-wide image metadata profiling over a binary column: format,
-    width, height, n_bytes per media row — Arrow-batched ``mapInPandas``
-    running :func:`parse_image_header` (bytes-level parsing, no decode,
-    constant memory per batch). The triage pass that decides resize /
-    filter / bucket-by-aspect long before any expensive pixel decode."""
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("format", T.StringType()),
-            T.StructField("width", T.LongType()),
-            T.StructField("height", T.LongType()),
-            T.StructField("n_bytes", T.LongType()),
-        ]
-    )
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf[id_col], pdf[content_col]):
-                raw = bytes(content) if content is not None else b""
-                fmt, w, h = parse_image_header(raw)
-                rows.append((int(mid), fmt, w, h, len(raw)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "format", "width", "height", "n_bytes"]
-            )
-
-    return df.select(
-        F.col(id_col).alias(id_col), F.col(content_col).alias(content_col)
-    ).mapInPandas(_run, schema)

@@ -98,21 +98,6 @@ def salted_join(
     return out.drop("_salt")
 
 
-def approx_distinct_profile(
-    df: DataFrame, columns: list[str], rsd: float = 0.05
-) -> DataFrame:
-    """Approximate distinct-cardinality profile: one HyperLogLog++ sketch
-    per column in a single pass — the scan-speed alternative to N exact
-    count-distinct shuffles when profiling wide tables at 100 TB.
-    Accuracy knob: ``rsd`` (relative standard deviation). Approximate by
-    design → exercised in unit tests, not the value-hash oracle gate."""
-    aggs = [
-        F.approx_count_distinct(c, rsd).cast("long").alias(f"{c}_approx_distinct")
-        for c in columns
-    ]
-    return df.agg(*aggs)
-
-
 def approx_quantiles_profile(
     df: DataFrame, column: str, probabilities: list[float], accuracy: int = 10000
 ) -> DataFrame:

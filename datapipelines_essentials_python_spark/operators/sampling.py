@@ -28,13 +28,6 @@ def hash_fraction(col: Column | str, salt: str = "") -> Column:
     return F.conv(F.substring(h, 1, 8), 16, 10).cast("double") / F.lit(4294967296.0)
 
 
-def uniform_sample(
-    df: DataFrame, id_col: str, fraction: float, salt: str = ""
-) -> DataFrame:
-    """Keep a deterministic ``fraction`` of rows, keyed on ``id_col``."""
-    return df.where(hash_fraction(id_col, salt) < fraction)
-
-
 def stratified_sample(
     df: DataFrame,
     strata_col: str,

@@ -184,17 +184,6 @@ def hll_merge(
     )
 
 
-def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Merge two Count-Min sketches: counter-wise SUM (same depth/width
-    required). ``estimate(merge(s(X), s(Y))) == estimate(s(X ⊎ Y))`` —
-    CMS is a linear sketch, so per-partition sketches add."""
-    return (
-        a.unionByName(b)
-        .groupBy("row_idx", "bucket")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # Fixed-range histogram quantile sketch
 # ---------------------------------------------------------------------------

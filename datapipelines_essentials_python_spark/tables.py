@@ -123,14 +123,3 @@ def load_table(
         if fsize >= _PARALLELIZE_MIN_BYTES and df.rdd.getNumPartitions() < target:
             df = df.repartition(target)
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES, register_views: bool = False
-) -> dict[str, DataFrame]:
-    out = {}
-    for name in names:
-        out[name] = load_table(spark, sf_dir, name)
-        if register_views:
-            out[name].createOrReplaceTempView(name)
-    return out

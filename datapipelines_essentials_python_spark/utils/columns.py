@@ -92,7 +92,3 @@ def column_to_list(df: DataFrame, column: str) -> list:
 
 def two_columns_to_dict(df: DataFrame, key_col: str, value_col: str) -> dict:
     return {r[0]: r[1] for r in df.select(key_col, value_col).collect()}
-
-
-def to_list_of_dicts(df: DataFrame) -> list[dict]:
-    return [r.asDict(recursive=True) for r in df.collect()]

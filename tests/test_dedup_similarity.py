@@ -20,13 +20,6 @@ def test_exact_dedup(spark, docs):
     assert dedup.exact_dedup(docs, ["text"]).count() == 3
 
 
-def test_exact_dedup_keep_first(spark, docs):
-    out = dedup.exact_dedup_keep_first(docs, ["text"], ["doc_id"])
-    # keep FIRST row per text under ascending doc_id: base text keeps 1, not 4
-    kept = {r["doc_id"] for r in out.collect()}
-    assert kept == {1, 2, 3}
-
-
 def test_release_unpersists_pair_intermediates(spark, docs):
     out = dedup.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.5)
     out.collect()

@@ -177,3 +177,82 @@ def test_query_rule_view_lives_only_for_the_call(spark):
     _, results2 = execute_rules(spark, second, config)
     assert not spark.catalog.tableExists("temp")
     assert [r.violation_count for r in results + results2] == [1, 3]
+
+
+def test_query_rules_leave_a_user_temp_view_intact(spark):
+    """A caller's own ``temp`` view is neither read by the rules nor
+    replaced or dropped by the call."""
+    user = spark.createDataFrame([(i,) for i in range(-5, 0)], "id int")
+    user.createOrReplaceTempView("temp")
+    try:
+        batch = spark.createDataFrame([(-1,), (-2,), (3,), (4,), (5,), (6,), (7,)], "id int")
+        config = DQConfig(
+            dq_id="t",
+            rules=[Rule("1", "neg_ids", "query", query="SELECT * FROM temp WHERE id < 0")],
+        )
+        _, results = execute_rules(spark, batch, config)
+        assert [(r.violation_count, r.total_count) for r in results] == [(2, 7)]
+        assert sorted(r["id"] for r in spark.table("temp").collect()) == [-5, -4, -3, -2, -1]
+    finally:
+        spark.catalog.dropTempView("temp")
+
+
+def test_query_rule_sql_runs_as_written(spark):
+    """Rule SQL that is legal as a statement stays legal inside the
+    ``temp`` CTE: a trailing ``;`` and a trailing comment."""
+    batch = spark.createDataFrame([(-1,), (-2,), (3,)], "id int")
+    config = DQConfig(
+        dq_id="t",
+        rules=[
+            Rule("1", "semicolon", "query", query="SELECT * FROM temp WHERE id < 0; \n"),
+            Rule("2", "comment", "query", query="SELECT * FROM temp -- every row"),
+        ],
+    )
+    _, results = execute_rules(spark, batch, config)
+    assert [r.violation_count for r in results] == [2, 3]
+
+
+def test_concurrent_calls_on_one_session_each_see_their_own_batch(spark, monkeypatch):
+    """Two threads run ``execute_rules`` at once on different frames. A
+    barrier in ``SparkSession.sql`` holds each thread until both have
+    registered their batch, the point where a shared view name would
+    have one call read the other's rows."""
+    import threading
+
+    barrier = threading.Barrier(2, timeout=120)
+    sql = type(spark).sql
+
+    def sql_after_both_registered(self, *args, **kwargs):
+        barrier.wait()
+        return sql(self, *args, **kwargs)
+
+    config = DQConfig(
+        dq_id="t",
+        rules=[
+            Rule("1", "id_unique", "unique", columns=("id",)),
+            Rule("2", "neg_ids", "query", query="SELECT * FROM temp WHERE id < 0"),
+        ],
+    )
+    frames = {
+        "a": spark.createDataFrame([(-1,), (1,), (1,)], "id int"),
+        "b": spark.createDataFrame([(-1,), (-2,), (-3,), (4,), (5,)], "id int"),
+    }
+    monkeypatch.setattr(type(spark), "sql", sql_after_both_registered)
+    got, errors = {}, []
+
+    def run(name):
+        try:
+            _, results = execute_rules(spark, frames[name], config)
+            got[name] = [(r.violation_count, r.total_count) for r in results]
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+            barrier.abort()
+
+    threads = [threading.Thread(target=run, args=(n,)) for n in frames]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert got == {"a": [(1, 3), (1, 3)], "b": [(0, 5), (3, 5)]}

@@ -141,17 +141,28 @@ def test_jdbc_roundtrip_embedded_derby(spark, tmp_path):
     in Spark's jars — exercises the actual JDBC sink/source path (S7/S12
     JDBC leg), not just option construction."""
     from datapipelines_essentials_python_spark.io.readers import read_data
-    from datapipelines_essentials_python_spark.io.writers import (
-        write_data,
-        write_jdbc_partitioned,
-    )
+    from datapipelines_essentials_python_spark.io.writers import write_data
 
     url = f"jdbc:derby:{tmp_path}/db;create=true"
     opts = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
-    src = spark.range(100).selectExpr("id", "cast(id % 7 as string) as grp")
+    src = spark.range(0, 100, 1, 8).selectExpr("id", "cast(id % 7 as string) as grp")
 
-    # partitioned writer: numPartitions fan-out (one connection each)
-    write_jdbc_partitioned(src, url, "T1", num_partitions=4, options=opts)
+    # numPartitions fan-out (one connection each): 8 partitions write as 4 tasks
+    sc = spark.sparkContext
+    sc.setJobGroup("jdbc_fan_out", "numPartitions write")
+    try:
+        write_data(
+            src, "jdbc", options={**opts, "url": url, "dbtable": "T1", "numPartitions": 4}
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    tasks = [
+        tracker.getStageInfo(s).numTasks
+        for j in tracker.getJobIdsForGroup("jdbc_fan_out")
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    assert tasks == [4]
     back = read_data(spark, "jdbc", options={**opts, "url": url, "dbtable": "T1"})
     assert back.count() == 100
     assert back.agg({"id": "sum"}).collect()[0][0] == 4950

@@ -48,13 +48,6 @@ def test_extract_features_default_decoder_fails_loudly(spark, media):
         mm.extract_features(media).collect()
 
 
-def test_frame_sample_plan(spark, media):
-    frames = mm.frame_sample_plan(media, every_ms=1000).collect()
-    # only the video row; 3500ms at 1000ms → ts 0,1000,2000,3000
-    assert {r["frame_ts_ms"] for r in frames} == {0, 1000, 2000, 3000}
-    assert {r["media_id"] for r in frames} == {2}
-
-
 def test_documents_as_media_schema(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(5)
     media = mm.documents_as_media(docs)
@@ -77,82 +70,3 @@ def test_chunk_text_media(spark):
     assert len(by_id[2]) == 1 and by_id[2][0]["n_bytes"] == 5
     # empty payload still yields one (empty) chunk
     assert len(by_id[3]) == 1 and by_id[3][0]["sha256"] == hashlib.sha256(b"").hexdigest()
-
-
-def test_parse_image_header_png_jpeg():
-    import struct
-
-    from datapipelines_essentials_python_spark.operators.multimodal import (
-        parse_image_header,
-    )
-
-    # minimal PNG: signature + IHDR with 640x480
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + struct.pack(">I", 13)
-        + b"IHDR"
-        + struct.pack(">II", 640, 480)
-        + b"\x08\x02\x00\x00\x00"
-    )
-    assert parse_image_header(png) == ("png", 640, 480)
-
-    # minimal JPEG: SOI + APP0 stub + SOF0 with 1024x768 (h then w)
-    app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
-    sof0 = b"\xff\xc0" + struct.pack(">H", 17) + b"\x08" + struct.pack(
-        ">HH", 768, 1024
-    ) + b"\x03" + b"\x00" * 9
-    jpeg = b"\xff\xd8" + app0 + sof0
-    assert parse_image_header(jpeg) == ("jpeg", 1024, 768)
-
-    assert parse_image_header(b"notanimage") == ("unknown", 0, 0)
-    assert parse_image_header(b"") == ("unknown", 0, 0)
-
-
-def test_image_header_stats_distributed(spark):
-    import struct
-
-    from datapipelines_essentials_python_spark.operators.multimodal import (
-        image_header_stats,
-    )
-
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + struct.pack(">I", 13)
-        + b"IHDR"
-        + struct.pack(">II", 320, 200)
-        + b"\x08\x02\x00\x00\x00"
-    )
-    rows = [(1, bytearray(png)), (2, bytearray(b"junk"))]
-    df = spark.createDataFrame(rows, "media_id long, content binary")
-    out = {r["media_id"]: r for r in image_header_stats(df).collect()}
-    assert out[1]["format"] == "png" and out[1]["width"] == 320
-    assert out[1]["height"] == 200 and out[1]["n_bytes"] == len(png)
-    assert out[2]["format"] == "unknown" and out[2]["n_bytes"] == 4
-
-
-def test_parse_image_header_jpeg_padding_and_sos():
-    """Spec-legal 0xFF fill bytes before markers are skipped, and the scan
-    stops at SOS/EOI instead of misreading entropy-coded data."""
-    import struct
-
-    from datapipelines_essentials_python_spark.operators.multimodal import (
-        parse_image_header,
-    )
-
-    app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
-    sof0 = (
-        b"\xff\xc0" + struct.pack(">H", 17) + b"\x08"
-        + struct.pack(">HH", 600, 800) + b"\x03" + b"\x00" * 9
-    )
-    # padding runs of 0xFF before both segments
-    padded = b"\xff\xd8" + b"\xff\xff\xff" + app0[1:] + b"\xff\xff" + sof0[1:]
-    assert parse_image_header(padded) == ("jpeg", 800, 600)
-
-    # SOS before any SOF: stop cleanly (no bogus read of entropy data)
-    sos = b"\xff\xda" + struct.pack(">H", 12) + b"\x03" + b"\x00" * 9
-    entropy = b"\xff\xc0\x99\x99" * 4  # SOF-looking bytes INSIDE scan data
-    no_sof = b"\xff\xd8" + app0 + sos + entropy + b"\xff\xd9"
-    assert parse_image_header(no_sof) == ("unknown", 0, 0)
-
-    # EOI immediately: unknown, not a crash
-    assert parse_image_header(b"\xff\xd8\xff\xd9") == ("unknown", 0, 0)

@@ -126,54 +126,3 @@ def test_mockup_dataframe(spark):
     df = generate_dataframe(spark, schema, n_rows=25, seed=3)
     assert df.count() == 25
     assert df.schema == schema
-
-
-# --------------------------------------------------------------------------
-# sizing calculators (ops.tuning)
-# --------------------------------------------------------------------------
-def test_recommend_shuffle_partitions():
-    from datapipelines_essentials_python_spark.ops.tuning import (
-        MB,
-        recommend_shuffle_partitions,
-    )
-
-    assert recommend_shuffle_partitions(0) == 1
-    assert recommend_shuffle_partitions(256 * MB) == 1
-    assert recommend_shuffle_partitions(256 * MB + 1) == 2
-    # 10 GB at 256 MB → 40; rounded up to full 32-core waves → 64
-    assert recommend_shuffle_partitions(10 * 1024 * MB, round_to_cores=32) == 64
-
-
-def test_recommend_max_partition_bytes_clamps():
-    from datapipelines_essentials_python_spark.ops.tuning import (
-        MB,
-        recommend_max_partition_bytes,
-    )
-
-    # tiny input clamps to the floor, huge input to the ceiling
-    assert recommend_max_partition_bytes(1 * MB, cores=32) == 16 * MB
-    assert recommend_max_partition_bytes(10_000_000 * MB, cores=32) == 512 * MB
-    # mid-range: ~3 waves of 32 cores
-    v = recommend_max_partition_bytes(9600 * MB, cores=32, waves=3)
-    assert v == 100 * MB
-
-
-def test_recommend_num_buckets_power_of_two():
-    from datapipelines_essentials_python_spark.ops.tuning import (
-        GB,
-        recommend_num_buckets,
-    )
-
-    assert recommend_num_buckets(1 * GB) == 4
-    assert recommend_num_buckets(100 * GB) == 512
-    assert recommend_num_buckets(100 * GB, power_of_two=False) == 400
-
-
-def test_recommend_output_files():
-    from datapipelines_essentials_python_spark.ops.tuning import (
-        MB,
-        recommend_output_files,
-    )
-
-    assert recommend_output_files(0) == 1
-    assert recommend_output_files(1024 * MB) == 2

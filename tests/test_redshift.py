@@ -77,9 +77,7 @@ def test_copy_unload_roundtrip_derby_warehouse(spark, tmp_path):
         stage_and_copy,
         unload_and_read,
     )
-    from datapipelines_essentials_python_spark.io.writers import (
-        write_jdbc_partitioned,
-    )
+    from datapipelines_essentials_python_spark.io.writers import write_data
 
     url = f"jdbc:derby:{tmp_path}/wh;create=true"
     opts = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
@@ -93,7 +91,11 @@ def test_copy_unload_roundtrip_derby_warehouse(spark, tmp_path):
             m = re.match(r"COPY (\S+) FROM '([^']+)'", stmt)
             table, stage = m.group(1), m.group(2)
             staged = spark.read.parquet(stage)
-            write_jdbc_partitioned(staged, url, table, num_partitions=2, options=opts)
+            write_data(
+                staged,
+                "jdbc",
+                options={**opts, "url": url, "dbtable": table, "numPartitions": 2},
+            )
         elif stmt.startswith("UNLOAD "):
             m = re.match(r"UNLOAD \('(.+)'\) TO '([^']+)'", stmt, re.DOTALL)
             query, stage = m.group(1).replace("''", "'"), m.group(2)

@@ -3,8 +3,7 @@
 1. k-truss peel loop: ``graph.ktruss`` recounts support every round; it
    is checked against a pure-Python recount-per-round reference
    (adjacency sets and intersections, no Spark) with the ``max_rounds``
-   cap binding and not, and its checkpointing path against the lazy
-   plan-shape mode.
+   cap binding and not.
 
 2. Frontier-loop fold gate (VERDICT r09 item 1): the round-9 per-round
    keyed fold repartition is now applied only when its row-derived
@@ -67,23 +66,8 @@ def test_ktruss_matches_python_recount_reference(spark):
     edges = spark.createDataFrame(pairs, "src long, dst long")
     for k in (3, 4):
         for rounds in (1, 2, 4):
-            got = _sup_map(
-                graph.ktruss(edges, k=k, max_rounds=rounds, materialize=True)
-            )
+            got = _sup_map(graph.ktruss(edges, k=k, max_rounds=rounds))
             assert got == _python_ktruss(pairs, k, rounds), (k, rounds)
-
-
-def test_ktruss_materialized_matches_plan_mode(spark):
-    """The checkpointing path (materialize=True, what the bench runs)
-    returns the same integers as the lazy plan-shape mode."""
-    pairs = [
-        (1, 2), (1, 3), (1, 4), (2, 3), (2, 4),
-        (4, 5), (5, 6), (4, 6), (1, 5),
-    ]
-    edges = spark.createDataFrame(pairs, "src long, dst long")
-    got = _sup_map(graph.ktruss(edges, k=4, max_rounds=3, materialize=True))
-    want = _sup_map(graph.ktruss(edges, k=4, max_rounds=3, materialize=False))
-    assert got == want
 
 
 # ------------------------------------------------ frontier fold gate

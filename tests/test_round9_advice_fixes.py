@@ -7,8 +7,6 @@ Each test pins one fixed edge case:
   instead of silently colliding.
 - psi_drift / chi2_drift: NULL values get the dedicated -1 bucket, not
   bucket 0.
-- streaming_staleness_monitor: non-string keys (BIGINT) work — the
-  output schema derives the key type from the input.
 - ndcg_at_k: queries that retrieved zero rows within top-k still emit
   a zero row instead of vanishing from the output.
 """
@@ -88,36 +86,6 @@ def test_chi2_drift_nulls_get_dedicated_bucket(spark):
     assert out[-1] == (1, 0)
     assert out[0] == (1, 0)
     assert out[1] == (0, 1)
-
-
-def test_staleness_monitor_bigint_key(spark, tmp_path):
-    from datapipelines_essentials_python_spark.streaming.stateful import (
-        streaming_staleness_monitor,
-    )
-
-    schema = "key long, ts_us long"
-    rows = [(7, 1_000_000), (7, 2_000_000), (7, 400_000_000)]
-    src = str(tmp_path / "stale_bigint")
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = (
-        streaming_staleness_monitor(stream, "key", "ts_us", 300_000_000)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("stale_bigint_mon")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            r["ts_us"]: (r["key"], r["gap_us"], r["is_stale"])
-            for r in spark.sql("SELECT * FROM stale_bigint_mon").collect()
-        }
-    finally:
-        q.stop()
-    assert got[1_000_000] == (7, None, False)
-    assert got[2_000_000] == (7, 1_000_000, False)
-    assert got[400_000_000] == (7, 398_000_000, True)
 
 
 def test_ndcg_zero_retrieved_query_emits_zero_row(spark):

@@ -73,21 +73,6 @@ def test_hll_merge_is_lossless(spark):
     assert est_m == est_f  # merge is exactly lossless
 
 
-def test_cms_merge_is_linear(spark):
-    df = spark.createDataFrame(
-        [(f"k{i % 9}",) for i in range(900)], "x string"
-    )
-    a = spark.createDataFrame([(f"k{i % 9}",) for i in range(400)], "x string")
-    b = spark.createDataFrame([(f"k{i % 9}",) for i in range(400, 900)], "x string")
-    merged = sketches.cms_merge(
-        sketches.cms_build(a, "x"), sketches.cms_build(b, "x")
-    )
-    full = sketches.cms_build(df, "x")
-    m = {(r["row_idx"], r["bucket"]): r["cnt"] for r in merged.collect()}
-    f = {(r["row_idx"], r["bucket"]): r["cnt"] for r in full.collect()}
-    assert m == f
-
-
 def test_histogram_merge_is_linear_and_quantiles_bounded(spark):
     """Histogram sketches are linear (per-split sketches sum to the full
     sketch) and the quantile estimate sits within one bin width above the
