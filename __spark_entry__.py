@@ -5068,7 +5068,7 @@ def dow_outlier_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hilbert-curve layout keys (``hashing.hilbert_key``, 10-bit) over
+    """Hilbert-curve layout keys (``hashing.with_hilbert_key``, 10-bit) over
     the same two event dimensions as ``zorder_layout`` — the
     space-filling curve with strictly better clustering than Morton
     order (no long diagonal jumps at block boundaries → tighter file

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datapipelines_essentials_python_spark.dq.rules import DQConfig, RuleResult
+from datapipelines_essentials_python_spark.functions.audit import source_file_name
 from datapipelines_essentials_python_spark.functions.nulls import is_null_or_blank
 
 
@@ -131,10 +132,7 @@ def file_completeness(
     local relation, so the anti-join broadcasts. Zero rows = rule passes.
     """
     spark = df.sparkSession
-    decoded = F.url_decode(F.regexp_replace(F.input_file_name(), r"\+", "%2B"))
-    seen = df.select(
-        F.element_at(F.split(decoded, "/"), -1).alias("missing_file")
-    ).distinct()
+    seen = df.select(source_file_name().alias("missing_file")).distinct()
     expected = spark.createDataFrame(
         [(name,) for name in expected_files], "missing_file string"
     )

@@ -75,8 +75,3 @@ def resolve_function(name: str) -> ColumnFactory:
         )
     return FUNCTION_REGISTRY[key]
 
-
-def register(name: str, factory: ColumnFactory) -> None:
-    """Extension point — replaces the reference's monkey-patched
-    DataFrame/RDD extensions (``transformation_extension.py:1-10``)."""
-    FUNCTION_REGISTRY[name.strip().lower()] = factory

@@ -30,10 +30,9 @@ from datapipelines_essentials_python_spark.functions.durations import (
 )
 from datapipelines_essentials_python_spark.functions.hashing import (
     row_hash_md5,
-    row_hash_xxhash64,
     salted_key,
 )
-from datapipelines_essentials_python_spark.functions.audit import with_audit_columns
+from datapipelines_essentials_python_spark.functions.audit import source_file_name
 from datapipelines_essentials_python_spark.functions.lookup import lookup_codes
 
 __all__ = [
@@ -49,11 +48,10 @@ __all__ = [
     "remove_all_whitespace",
     "remove_non_word_characters",
     "row_hash_md5",
-    "row_hash_xxhash64",
     "salted_key",
     "seconds_to_iso_duration",
     "single_space",
+    "source_file_name",
     "to_date_safe",
     "to_gmt",
-    "with_audit_columns",
 ]

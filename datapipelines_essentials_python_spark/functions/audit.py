@@ -9,24 +9,19 @@ Capability parity (SURVEY.md §2.8 F7): the reference appends
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def with_audit_columns(
-    df: DataFrame,
-    file_name_col: str = "file_name",
-    timestamp_col: str = "spark_timestamp",
-    batch_id: str | None = None,
-) -> DataFrame:
-    """Append source-file name, load timestamp, and optional batch id.
+def source_file_name() -> Column:
+    """Base name of the file the current row was scanned from, as it is
+    named on disk.
 
-    ``current_timestamp()`` is per-query-constant in Spark, which matches
-    the reference's driver-side '<now>' literal semantics.
+    ``input_file_name()`` yields a percent-encoded URI; it is decoded so
+    names with spaces or non-ASCII characters match the reference's raw
+    file-name column. A literal ``+`` is re-encoded first, because
+    ``url_decode`` (URLDecoder semantics) would otherwise turn it into a
+    space.
     """
-    out = df.withColumn(
-        file_name_col, F.element_at(F.split(F.input_file_name(), "/"), -1)
-    ).withColumn(timestamp_col, F.current_timestamp())
-    if batch_id is not None:
-        out = out.withColumn("batch_id", F.lit(batch_id))
-    return out
+    decoded = F.url_decode(F.regexp_replace(F.input_file_name(), r"\+", "%2B"))
+    return F.element_at(F.split(decoded, "/"), -1)

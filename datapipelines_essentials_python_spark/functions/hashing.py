@@ -38,13 +38,6 @@ def row_hash_md5(df: DataFrame, columns: list[str] | None = None) -> Column:
     )
 
 
-def row_hash_xxhash64(df: DataFrame, columns: list[str] | None = None) -> Column:
-    """64-bit xxhash over the selected columns — cheaper than md5 for CDC
-    change detection at 100 TB (no string materialization)."""
-    cols = sorted(columns) if columns else _cols(df)
-    return F.xxhash64(*[F.col(c) for c in cols])
-
-
 def salted_key(columns: list[str], num_buckets: int, sep: str = "~") -> Column:
     """Composite repartition key with a random salt bucket appended
     (parity: ``spark.py:142-147``). Prefer AQE skew handling for joins; this
@@ -75,45 +68,31 @@ def zorder_key(x, y, bits: int = 10):
     return key
 
 
-def hilbert_key(x, y, bits: int = 10):
-    """Hilbert-curve key: map two non-negative ``bits``-bit integer
-    columns onto the Hilbert space-filling curve — the layout key with
-    strictly better locality than :func:`zorder_key`'s Morton order
-    (Hilbert never takes the long diagonal jumps Morton takes at block
-    boundaries, so file min/max ranges after
-    ``sortWithinPartitions(hilbert_key(...))`` + write are tighter and
-    prune more; see Moon et al., "Analysis of the Clustering Properties
-    of the Hilbert Space-Filling Curve", TKDE 2001 — public).
+def with_hilbert_key(df, x, y, bits: int = 10, out_col: str = "hkey"):
+    """Append a Hilbert-curve key column to ``df``: map two non-negative
+    ``bits``-bit integer columns onto the Hilbert space-filling curve —
+    the layout key with strictly better locality than
+    :func:`zorder_key`'s Morton order (Hilbert never takes the long
+    diagonal jumps Morton takes at block boundaries, so file min/max
+    ranges after ``sortWithinPartitions(out_col)`` + write are tighter
+    and prune more; see Moon et al., "Analysis of the Clustering
+    Properties of the Hilbert Space-Filling Curve", TKDE 2001 — public).
 
     The standard xy→d walk (rotate-and-fold, one level per bit from the
-    top), UNROLLED into pure integer/CASE column arithmetic — no UDF,
-    no loop state, deterministic and portable, so a SQL oracle can
-    replay it level by level. Per level: quadrant = CASE(rx, ry) (the
-    Gray-code cell index), then the rotation that keeps the curve
-    continuous (ry=0 swaps axes; ry=0 ∧ rx=1 also reflects).
-    """
-    from pyspark.sql import functions as F
+    top), unrolled into pure integer/CASE column arithmetic — no UDF, no
+    loop state, deterministic and portable, so a SQL oracle can replay
+    it level by level. Per level: quadrant = CASE(rx, ry) (the Gray-code
+    cell index), then the rotation that keeps the curve continuous
+    (ry=0 swaps axes; ry=0 ∧ rx=1 also reflects).
 
-    raise NotImplementedError(
-        "hilbert_key cannot be a single Column expression: each level's "
-        "rotation references the previous level's coordinates several "
-        "times, so the unrolled tree grows exponentially in `bits` "
-        "(observed as a driver OOM while CONSTRUCTING the expression). "
-        "Use with_hilbert_key(df, ...), which materializes each level's "
-        "state as named projection columns — same arithmetic, linear-"
-        "size plan."
-    )
-
-
-def with_hilbert_key(df, x, y, bits: int = 10, out_col: str = "hkey"):
-    """Append a Hilbert key column to ``df`` — see :func:`hilbert_key`
-    for the semantics and why this is a DataFrame transform, not a
-    Column: the per-level rotation reads the previous level's (x, y)
-    MULTIPLE times, so the state must live as NAMED columns (each level
-    is one cheap projection over attributes; Catalyst keeps the layers
-    because CollapseProject refuses to duplicate non-trivial aliases) —
-    a pure Column unroll re-expands the whole subtree at every
-    reference and the expression grows exponentially in ``bits``.
+    A DataFrame transform, not a Column: the per-level rotation reads
+    the previous level's (x, y) MULTIPLE times, so the state must live
+    as NAMED columns (each level is one cheap projection over
+    attributes; Catalyst keeps the layers because CollapseProject
+    refuses to duplicate non-trivial aliases) — a pure Column unroll
+    re-expands the whole subtree at every reference and the expression
+    grows exponentially in ``bits`` (observed as a driver OOM while
+    constructing the expression).
 
     Still zero shuffles, zero UDFs: ``bits`` stacked narrow projections
     riding the scan.

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from datapipelines_essentials_python_spark.errors import UnknownFileTypeError
+from datapipelines_essentials_python_spark.functions.audit import source_file_name
 from datapipelines_essentials_python_spark.functions.hashing import row_hash_md5
 
 # filetype aliases accepted by the dispatcher (lowercase)
@@ -121,13 +122,8 @@ def read_with_audit_columns(
     distributed (SURVEY §2.1 S10, §2.8 F7/F8).
     """
     df = read_data(spark, filetype, location, schema=schema, options=options)
-    # input_file_name() yields a percent-encoded URI; decode it so names
-    # with spaces/non-ASCII match the reference's raw file-name column.
-    # Literal '+' is re-encoded first because url_decode (URLDecoder
-    # semantics) would otherwise turn it into a space.
-    decoded = F.url_decode(F.regexp_replace(F.input_file_name(), r"\+", "%2B"))
     return (
-        df.withColumn("file_name", F.element_at(F.split(decoded, "/"), -1))
+        df.withColumn("file_name", source_file_name())
         .withColumn("hashcode", row_hash_md5(df, hash_columns or df.columns))
         .withColumn("spark_timestamp", F.current_timestamp())
     )

@@ -31,6 +31,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from datapipelines_essentials_python_spark.utils.repartition import (
+    pinned_checkpoint,
+)
+
 from .text import tokens
 
 
@@ -77,7 +81,6 @@ def span_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     block_size: int = 8,
-    materialize: bool = True,
 ) -> DataFrame:
     """C4-style span dedup: split each document into non-overlapping
     ``block_size``-token blocks, drop every block whose text already
@@ -97,18 +100,13 @@ def span_dedup(
     blocks = chunk_documents(
         df, text_col=text_col, id_col=id_col, chunk_size=block_size, stride=block_size
     ).select(id_col, F.col("chunk_id").alias("block_idx"), F.col("chunk_text"))
-    if materialize:
-        # Round-9 (guide §2.3/§2.4): the block table feeds the
-        # first-occurrence agg AND the marking join; their exchanges
-        # carry different payloads, so exchange reuse cannot dedup them
-        # and the tokenize+chunk projection ran twice. One block-text-
-        # keyed pinned materialization runs it once; both consumers ride
-        # the layout with zero further exchanges.
-        from datapipelines_essentials_python_spark.utils.repartition import (
-            pinned_checkpoint,
-        )
-
-        blocks = pinned_checkpoint(blocks, "chunk_text")
+    # Round-9 (guide §2.3/§2.4): the block table feeds the
+    # first-occurrence agg AND the marking join; their exchanges
+    # carry different payloads, so exchange reuse cannot dedup them
+    # and the tokenize+chunk projection ran twice. One block-text-
+    # keyed pinned materialization runs it once; both consumers ride
+    # the layout with zero further exchanges.
+    blocks = pinned_checkpoint(blocks, "chunk_text")
     # first occurrence = min (id, block_idx) per block text — combinable
     # agg with map-side partials instead of a row_number window, so a
     # boilerplate block repeated 10^6 times never sorts on one partition
@@ -193,7 +191,6 @@ def substring_dup_profile(
     id_col: str = "doc_id",
     window: int = 16,
     stride: int = 4,
-    materialize: bool = True,
 ) -> DataFrame:
     """Rolling-window substring-duplication profile — the overlapping-span
     complement of :func:`span_dedup` (which only sees ``block_size``-aligned
@@ -220,16 +217,11 @@ def substring_dup_profile(
     wins = chunk_documents(
         df, text_col=text_col, id_col=id_col, chunk_size=window, stride=stride
     ).select(id_col, F.md5(F.col("chunk_text")).alias("__wkey"))
-    if materialize:
-        # Round-9 (guide §2.3/§2.4): same double-consumer shape as
-        # span_dedup/exact_substring_dedup — the chunk+md5 projection
-        # fed both the count agg and the join; pin it keyed on __wkey
-        # so it runs once and both consumers ride the layout.
-        from datapipelines_essentials_python_spark.utils.repartition import (
-            pinned_checkpoint,
-        )
-
-        wins = pinned_checkpoint(wins, "__wkey")
+    # Round-9 (guide §2.3/§2.4): same double-consumer shape as
+    # span_dedup/exact_substring_dedup — the chunk+md5 projection
+    # fed both the count agg and the join; pin it keyed on __wkey
+    # so it runs once and both consumers ride the layout.
+    wins = pinned_checkpoint(wins, "__wkey")
     counts = wins.groupBy("__wkey").agg(F.count(F.lit(1)).alias("__c"))
     return (
         wins.join(counts, "__wkey")
@@ -256,7 +248,6 @@ def exact_substring_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     window_size: int = 8,
-    materialize: bool = True,
 ) -> DataFrame:
     """Remove duplicated SPANS (not documents): Lee et al. 2022's
     ExactSubstr behavior approximated at sliding-window granularity —
@@ -324,19 +315,14 @@ def exact_substring_dedup(
             F.array_join(F.slice(F.col("toks"), F.col("start") + 1, w), " ")
         ).alias("fp"),
     )
-    if materialize:
-        # Round-9 (guide §2.3/§2.4): the window table feeds the
-        # first-occurrence agg AND the marking join — two consumers
-        # whose exchanges carry different payloads, so exchange reuse
-        # cannot dedup them and the per-window md5 projection ran TWICE
-        # (event log: two full-width 1.9 s + 1.1 s hashing stages). One
-        # fp-keyed pinned materialization runs the hashing once and
-        # both consumers ride its layout with zero further exchanges.
-        from datapipelines_essentials_python_spark.utils.repartition import (
-            pinned_checkpoint,
-        )
-
-        wins = pinned_checkpoint(wins, "fp")
+    # Round-9 (guide §2.3/§2.4): the window table feeds the
+    # first-occurrence agg AND the marking join — two consumers
+    # whose exchanges carry different payloads, so exchange reuse
+    # cannot dedup them and the per-window md5 projection ran TWICE
+    # (event log: two full-width 1.9 s + 1.1 s hashing stages). One
+    # fp-keyed pinned materialization runs the hashing once and
+    # both consumers ride its layout with zero further exchanges.
+    wins = pinned_checkpoint(wins, "fp")
     # first occurrence = min (id, start) per fingerprint — a COMBINABLE
     # agg with map-side partials, deliberately not a row_number window:
     # a boilerplate fingerprint repeated 10^6 times partial-aggregates
@@ -445,7 +431,6 @@ def ngram_novelty(
     id_col: str = "doc_id",
     window: int = 8,
     stride: int = 1,
-    materialize: bool = True,
 ) -> DataFrame:
     """Per-document n-gram NOVELTY against the rest of the corpus in
     ``id_col`` order: the fraction of a document's ``window``-token
@@ -484,20 +469,11 @@ def ngram_novelty(
     # first-occurrence agg (keyed fp) and the reassociation join (keyed
     # fp) ALL ride its layout — one exchange of the window table instead
     # of three ((id, fp) distinct + both consumer exchanges).
-    if materialize:
-        from datapipelines_essentials_python_spark.utils.repartition import (
-            pinned_checkpoint,
-        )
-
-        raw = window_fingerprints(
-            df, text_col=text_col, id_col=id_col, window=window,
-            stride=stride, distinct=False,
-        )
-        wins = pinned_checkpoint(raw, "fp").distinct()
-    else:
-        wins = window_fingerprints(
-            df, text_col=text_col, id_col=id_col, window=window, stride=stride
-        )
+    raw = window_fingerprints(
+        df, text_col=text_col, id_col=id_col, window=window,
+        stride=stride, distinct=False,
+    )
+    wins = pinned_checkpoint(raw, "fp").distinct()
     first = wins.groupBy("fp").agg(F.min(id_col).alias("__first"))
     per_doc = (
         wins.join(first, "fp")

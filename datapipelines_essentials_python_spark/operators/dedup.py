@@ -148,8 +148,7 @@ def _warn_unblocked_posting_join(fn_name: str, unblocked: bool) -> None:
     corpus-wide posting join fans hot shingles out quadratically in their
     document frequency and measurably OOMed the 10× stress tier, while
     the blocked join cruised. A docstring alone is advisory — callers who
-    really want the corpus-wide join must say so with ``unblocked=True``
-    (the ``pareto_frontier_2d(materialize=False)`` warning treatment)."""
+    really want the corpus-wide join must say so with ``unblocked=True``."""
     if not unblocked:
         import warnings
 

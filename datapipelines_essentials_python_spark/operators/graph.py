@@ -255,7 +255,6 @@ def _pagerank_iteration(
 def hits(
     edges: DataFrame,
     iterations: int = 2,
-    materialize: bool = True,
 ) -> DataFrame:
     """HITS (hubs & authorities) power iteration over a DIRECTED edge
     list — the companion ranking to :func:`pagerank` for bipartite-ish
@@ -292,29 +291,24 @@ def hits(
     """
     if iterations < 1:
         raise ValueError(f"hits needs iterations >= 1, got {iterations}")
-    if materialize:
-        edges = edges.localCheckpoint(eager=True)
+    edges = edges.localCheckpoint(eager=True)
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    if materialize:
-        nodes = nodes.localCheckpoint(eager=True)
-        # one edge-derived width for every pin in the loop (see
-        # loop_parts) — co-partitioned counts must match for the
-        # half-step SHJs to stay exchange-free
-        parts = loop_parts(edges)
-        # one stationary copy per join key — the half-steps alternate
-        # between src- and dst-keyed joins, and a pinned layout only
-        # removes the per-step edge Exchange for ITS key
-        edges_by = {
-            "src": pinned_checkpoint(edges, "src", parts=parts),
-            "dst": pinned_checkpoint(edges, "dst", parts=parts),
-        }
-    else:
-        parts = None
-        edges_by = {"src": edges, "dst": edges}
+    # one edge-derived width for every pin in the loop (see
+    # loop_parts) — co-partitioned counts must match for the
+    # half-step SHJs to stay exchange-free
+    parts = loop_parts(edges)
+    # one stationary copy per join key — the half-steps alternate
+    # between src- and dst-keyed joins, and a pinned layout only
+    # removes the per-step edge Exchange for ITS key
+    edges_by = {
+        "src": pinned_checkpoint(edges, "src", parts=parts),
+        "dst": pinned_checkpoint(edges, "dst", parts=parts),
+    }
 
     def _half_step(scores: DataFrame, join_on: str, agg_on: str) -> DataFrame:
         """One alternating update: sum quantized scores over edges joined
@@ -334,12 +328,11 @@ def hits(
             .groupBy("node")
             .agg(F.sum("c").cast("double").alias("raw"))
         )
-        if materialize:
-            # pin BEFORE the norm: the norm'd projection references
-            # ``raw`` twice (value branch + the 1-row norm aggregate),
-            # so an unpinned raw re-executes the contribution join per
-            # consumer
-            raw = pinned_checkpoint(raw, "node", parts=parts)
+        # pin BEFORE the norm: the norm'd projection references
+        # ``raw`` twice (value branch + the 1-row norm aggregate),
+        # so an unpinned raw re-executes the contribution join per
+        # consumer
+        raw = pinned_checkpoint(raw, "node", parts=parts)
         # squared terms quantize to 4 dp, not 12: raw sums reach ~1e5+ at
         # large tiers, so a 12-dp squared sum would cross the >=17-
         # significant-digit band where DuckDB's decimal->double is
@@ -363,18 +356,15 @@ def hits(
         )
 
     hub = nodes.select("node", F.lit(1.0).alias("score"))
-    if materialize:
-        hub = pinned_checkpoint(hub, "node", parts=parts)
+    hub = pinned_checkpoint(hub, "node", parts=parts)
     auth = None
     for _ in range(iterations):
         # authorities from current hubs: contributions flow src → dst
         auth = _half_step(hub, "src", "dst")
-        if materialize:
-            auth = pinned_checkpoint(auth, "node", parts=parts)
+        auth = pinned_checkpoint(auth, "node", parts=parts)
         # hubs from fresh authorities: contributions flow dst → src
         hub = _half_step(auth, "dst", "src")
-        if materialize:
-            hub = pinned_checkpoint(hub, "node", parts=parts)
+        hub = pinned_checkpoint(hub, "node", parts=parts)
     return (
         nodes.join(hub.select("node", F.col("score").alias("hub")), "node", "left")
         .join(auth.select("node", F.col("score").alias("authority")), "node", "left")
@@ -397,7 +387,7 @@ def undirected_edges(edges: DataFrame) -> DataFrame:
     )
 
 
-def triangle_counts(edges: DataFrame, materialize: bool = True) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts + local clustering coefficient over an
     undirected graph — the density/community signal behind spam-farm
     detection and graph-quality audits, and the classic MapReduce-era
@@ -425,9 +415,7 @@ def triangle_counts(edges: DataFrame, materialize: bool = True) -> DataFrame:
 
     → ``(node, degree, triangles, clustering)``, one row per node.
     """
-    und = undirected_edges(edges)
-    if materialize:
-        und = und.localCheckpoint(eager=True)
+    und = undirected_edges(edges).localCheckpoint(eager=True)
     deg = (
         und.select(F.col("u").alias("node"))
         .unionByName(und.select(F.col("v").alias("node")))
@@ -449,8 +437,7 @@ def triangle_counts(edges: DataFrame, materialize: bool = True) -> DataFrame:
             F.when(low_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
         )
     )
-    if materialize:
-        oriented = oriented.localCheckpoint(eager=True)
+    oriented = oriented.localCheckpoint(eager=True)
     wedges = (
         oriented.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .join(
@@ -496,7 +483,6 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 10,
     damping: float = 0.85,
-    materialize: bool = True,
     weight_col: str | None = None,
     tol: float | None = None,
 ) -> DataFrame:
@@ -511,31 +497,26 @@ def pagerank(
     discipline as the contribution sums) and the loop stops as soon as
     the delta drops below ``tol``. Costs one small keyed join + scalar
     collect per iteration; saves entire iterations on near-converged
-    graphs. Requires ``materialize=True`` (each kept iteration is pinned
-    anyway, so the delta aggregate re-reads checkpointed state, not the
-    lineage). ``tol=None`` preserves the fixed-iteration contract the
-    SQL oracle twins replay.
+    graphs. Each kept iteration is pinned, so the delta aggregate
+    re-reads checkpointed state, not the lineage. ``tol=None`` preserves
+    the fixed-iteration contract the SQL oracle twins replay.
 
-    ``materialize`` pins each iteration with an eager ``localCheckpoint``
-    — without it the lineage doubles per step and the final action
-    re-evaluates every iteration's joins (the components-loop lesson);
-    pass ``False`` only for plan-shape tests. → ``(node, rank)``.
+    Each iteration is pinned with an eager ``localCheckpoint`` — without
+    it the lineage doubles per step and the final action re-evaluates
+    every iteration's joins (the components-loop lesson).
+    → ``(node, rank)``.
     """
     if iterations < 1:
         raise ValueError(f"pagerank needs iterations >= 1, got {iterations}")
-    if tol is not None and not materialize:
-        raise ValueError("pagerank(tol=...) requires materialize=True")
-    if materialize:
-        # The edge list is consumed 3 times at setup (degrees, init's
-        # src∪dst, the wedge build); without pinning it, an upstream
-        # distinct/union re-evaluates per consumer — measured 11.3 s →
-        # ~4 s on the sf0.1 bench for 2 iterations.
-        edges = edges.localCheckpoint(eager=True)
+    # The edge list is consumed 3 times at setup (degrees, init's
+    # src∪dst, the wedge build); without pinning it, an upstream
+    # distinct/union re-evaluates per consumer — measured 11.3 s →
+    # ~4 s on the sf0.1 bench for 2 iterations.
+    edges = edges.localCheckpoint(eager=True)
     degrees = (
         out_degrees(edges) if weight_col is None else out_weights(edges, weight_col)
     )
-    if materialize:
-        degrees = degrees.localCheckpoint(eager=True)
+    degrees = degrees.localCheckpoint(eager=True)
     ranks = init_ranks(edges)
     # ---- loop-invariant prework (round-9 optimization, guide §2.4/§3.1):
     # (a) the per-source normalizer joins the EDGE table once, pre-loop,
@@ -551,16 +532,14 @@ def pagerank(
     # (c) the dangling-node SET (static: degrees never change) is
     #     computed once; each iteration only sums ranks over it.
     wedges = edges.join(degrees.withColumnRenamed("node", "src"), "src", "left")
-    if materialize:
-        # one edge-derived width for every pin in the loop (see
-        # loop_parts) — co-partitioned counts must match for the
-        # per-iteration SHJ to stay exchange-free
-        parts = loop_parts(edges)
-        wedges = pinned_checkpoint(wedges, "src", parts=parts)
-        ranks = pinned_checkpoint(ranks, "node", parts=parts)
+    # one edge-derived width for every pin in the loop (see
+    # loop_parts) — co-partitioned counts must match for the
+    # per-iteration SHJ to stay exchange-free
+    parts = loop_parts(edges)
+    wedges = pinned_checkpoint(wedges, "src", parts=parts)
+    ranks = pinned_checkpoint(ranks, "node", parts=parts)
     dangling_nodes = ranks.select("node").join(degrees, "node", "left_anti")
-    if materialize:
-        dangling_nodes = dangling_nodes.localCheckpoint(eager=True)
+    dangling_nodes = dangling_nodes.localCheckpoint(eager=True)
     if weight_col is None:
         share = F.col("rank") / F.col("outdeg").cast("double")
     else:
@@ -568,8 +547,7 @@ def pagerank(
     for _ in range(iterations):
         prev = ranks
         ranks = _pagerank_iteration(wedges, ranks, dangling_nodes, share, damping)
-        if materialize:
-            ranks = pinned_checkpoint(ranks, "node", parts=parts)
+        ranks = pinned_checkpoint(ranks, "node", parts=parts)
         if tol is not None:
             # 1-row L1 delta off two checkpointed node-sized tables; the
             # quantized DECIMAL sum makes the stop decision partitioning-
@@ -599,7 +577,6 @@ def personalized_pagerank(
     seeds: DataFrame,
     iterations: int = 2,
     damping: float = 0.85,
-    materialize: bool = True,
 ) -> DataFrame:
     """Personalized PageRank: the random walk teleports to the SEED set
     instead of the uniform vector — the seed-expansion primitive behind
@@ -623,11 +600,8 @@ def personalized_pagerank(
         raise ValueError(
             f"personalized_pagerank needs iterations >= 1, got {iterations}"
         )
-    if materialize:
-        edges = edges.localCheckpoint(eager=True)
-    degrees = out_degrees(edges)
-    if materialize:
-        degrees = degrees.localCheckpoint(eager=True)
+    edges = edges.localCheckpoint(eager=True)
+    degrees = out_degrees(edges).localCheckpoint(eager=True)
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
@@ -659,16 +633,14 @@ def personalized_pagerank(
     # the edge table every iteration. out_degrees covers every edge
     # source (count ≥ 1), so the left join never produces a NULL outdeg.
     wedges = edges.join(degrees.withColumnRenamed("node", "src"), "src", "left")
-    if materialize:
-        # one edge-derived width for every pin in the loop (see
-        # loop_parts) — co-partitioned counts must match for the
-        # per-iteration SHJ to stay exchange-free
-        parts = loop_parts(edges)
-        wedges = pinned_checkpoint(wedges, "src", parts=parts)
-        ranks = pinned_checkpoint(ranks, "node", parts=parts)
+    # one edge-derived width for every pin in the loop (see
+    # loop_parts) — co-partitioned counts must match for the
+    # per-iteration SHJ to stay exchange-free
+    parts = loop_parts(edges)
+    wedges = pinned_checkpoint(wedges, "src", parts=parts)
+    ranks = pinned_checkpoint(ranks, "node", parts=parts)
     dangling_nodes = ranks.select("node").join(degrees, "node", "left_anti")
-    if materialize:
-        dangling_nodes = dangling_nodes.localCheckpoint(eager=True)
+    dangling_nodes = dangling_nodes.localCheckpoint(eager=True)
     d = F.lit(damping)
     for _ in range(iterations):
         contrib = (
@@ -704,15 +676,13 @@ def personalized_pagerank(
                 ).alias("rank"),
             )
         )
-        if materialize:
-            ranks = pinned_checkpoint(ranks, "node", parts=parts)
+        ranks = pinned_checkpoint(ranks, "node", parts=parts)
     return ranks.select("node", "rank")
 
 
 def butterfly_counts(
     edges: DataFrame,
     max_right_degree: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Per-left-node butterfly (bipartite 4-cycle) counts over a
     bipartite edge list ``(src = left, dst = right)`` — the bipartite
@@ -757,13 +727,12 @@ def butterfly_counts(
     if max_right_degree is not None:
         rd = F.size("__parts") + F.when(F.col("__has_null"), 1).otherwise(0)
         rights = rights.where(rd <= max_right_degree)
-    if materialize:
-        # referenced twice (degree explode + pair explode) — cache so
-        # the scan + collect_set runs once. persist(), NOT
-        # localCheckpoint: the checkpoint's ExistingRDD loses size
-        # stats and the downstream joins' strategy choice with them;
-        # released via ``_sg_persisted`` on the returned frame.
-        rights = rights.persist()
+    # referenced twice (degree explode + pair explode) — cache so
+    # the scan + collect_set runs once. persist(), NOT
+    # localCheckpoint: the checkpoint's ExistingRDD loses size
+    # stats and the downstream joins' strategy choice with them;
+    # released via ``_sg_persisted`` on the returned frame.
+    rights = rights.persist()
     members = F.when(
         F.col("__has_null"),
         F.concat(
@@ -817,14 +786,11 @@ def butterfly_counts(
             ),
         )
     )
-    if materialize:
-        out._sg_persisted = [rights]  # noqa: SLF001 — released by bench/caller
+    out._sg_persisted = [rights]  # noqa: SLF001 — released by bench/caller
     return out
 
 
-def degree_assortativity(
-    edges: DataFrame, materialize: bool = True
-) -> DataFrame:
+def degree_assortativity(edges: DataFrame) -> DataFrame:
     """Degree histogram (power-of-two buckets) + the Pearson
     degree-degree assortativity coefficient of an undirected graph — the
     two scalars a graph-quality audit reads first: a heavy histogram
@@ -843,22 +809,20 @@ def degree_assortativity(
     → ``(bucket_log2, n_nodes, assortativity)``.
     """
     und = undirected_edges(edges)
-    if materialize:
-        # Round-9 optimization (guide §2.4): this plan references ``und``
-        # three times (both degree-union legs + the edge join) and ``deg``
-        # three times (histogram + both per-endpoint joins) — without
-        # pinning, the whole upstream edge build (for the registry query,
-        # the basket-explode aggregation) re-executes per reference:
-        # measured 62 Exchanges in one plan, ~5x the unique work.
-        und = und.localCheckpoint(eager=True)
+    # Round-9 optimization (guide §2.4): this plan references ``und``
+    # three times (both degree-union legs + the edge join) and ``deg``
+    # three times (histogram + both per-endpoint joins) — without
+    # pinning, the whole upstream edge build (for the registry query,
+    # the basket-explode aggregation) re-executes per reference:
+    # measured 62 Exchanges in one plan, ~5x the unique work.
+    und = und.localCheckpoint(eager=True)
     deg = (
         und.select(F.col("u").alias("node"))
         .unionByName(und.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))
     )
-    if materialize:
-        deg = deg.localCheckpoint(eager=True)
+    deg = deg.localCheckpoint(eager=True)
     # bucket = floor(ln(d)/ln 2) — written as the EXPLICIT ln ratio, never
     # log2(): Spark's log2 is ln(x)/ln(2) while DuckDB's is a native log2,
     # and the two disagree at exact powers of two (2.999... vs 3.0); the
@@ -898,7 +862,6 @@ def kcore(
     edges: DataFrame,
     k: int,
     max_rounds: int = 8,
-    materialize: bool = True,
 ) -> DataFrame:
     """k-core subgraph by iterative peeling — the standard spam/quality
     filter on web and co-occurrence graphs (Seidman, 1983; the dense-core
@@ -933,16 +896,14 @@ def kcore(
         raise ValueError(f"kcore needs k >= 1, got {k}")
     if max_rounds < 1:
         raise ValueError(f"kcore needs max_rounds >= 1, got {max_rounds}")
-    und = undirected_edges(edges)
-    if materialize:
-        und = und.localCheckpoint(eager=True)
+    und = undirected_edges(edges).localCheckpoint(eager=True)
     # Round-9 (guide §2.5): row-derived degree-fold width — see
     # bfs_distances; the per-peel endpoint union is bytes-light and
     # AQE's byte-based coalescing otherwise folds it on ~2 tasks.
     # Sized ONCE off the initial edge count (the edge set only shrinks).
     # Round-10 (VERDICT r09 item 1): gated on the width actually
     # exceeding AQE's — see _fold_parts.
-    parts = _fold_parts(und) if materialize else None
+    parts = _fold_parts(und)
 
     def _degrees(e: DataFrame) -> DataFrame:
         ends = e.select(F.col("u").alias("node")).unionByName(
@@ -957,8 +918,7 @@ def kcore(
     for _ in range(max_rounds):
         deg = _degrees(und)
         low = deg.where(F.col("core_degree") < k).select("node")
-        if materialize:
-            low = low.localCheckpoint(eager=True)
+        low = low.localCheckpoint(eager=True)
         # 1-row scalar action — the convergence test; reads checkpointed
         # state, not re-derived lineage.
         if low.count() == 0:
@@ -970,15 +930,13 @@ def kcore(
         und = und.join(
             low.select(F.col("node").alias("u")), "u", "left_anti"
         ).join(low.select(F.col("node").alias("v")), "v", "left_anti")
-        if materialize:
-            und = und.localCheckpoint(eager=True)
+        und = und.localCheckpoint(eager=True)
     return _degrees(und)
 
 
 def lpa_communities(
     edges: DataFrame,
     iterations: int = 4,
-    materialize: bool = True,
 ) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et
     al., 2007) with a DETERMINISTIC tie-break — communities over the
@@ -1009,36 +967,32 @@ def lpa_communities(
         raise ValueError(
             f"lpa_communities needs iterations >= 1, got {iterations}"
         )
-    und = undirected_edges(edges)
-    if materialize:
-        und = und.localCheckpoint(eager=True)
+    und = undirected_edges(edges).localCheckpoint(eager=True)
     adj = und.select(
         F.col("u").alias("src"), F.col("v").alias("dst")
     ).unionByName(und.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-    if materialize:
-        # pinned on hash(dst) (round-9, guide §2.4): the label-publish
-        # join streams adj in place (labels are the broadcast/built
-        # side), so the join output stays hash(dst→node)-partitioned and
-        # BOTH per-round aggregates — groupBy(node, label) then
-        # groupBy(node) — satisfy their distribution with ZERO new
-        # exchanges (hash on a subset of the grouping keys is a valid
-        # clustering). At 100 TB, where the label vector stops being
-        # broadcastable, the planner re-exchanges adj by src per round —
-        # the one fundamental LPA message shuffle — and the agg chain
-        # still rides the join's output partitioning. Width is
-        # edge-derived (loop_parts), not the session conf — every
-        # per-round stage rides this layout, so a small graph no longer
-        # pays core-budget-many tasks per round.
-        adj = pinned_checkpoint(
-            adj, "dst", parts=loop_parts(und, rows=2 * und.count())
-        )
+    # pinned on hash(dst) (round-9, guide §2.4): the label-publish
+    # join streams adj in place (labels are the broadcast/built
+    # side), so the join output stays hash(dst→node)-partitioned and
+    # BOTH per-round aggregates — groupBy(node, label) then
+    # groupBy(node) — satisfy their distribution with ZERO new
+    # exchanges (hash on a subset of the grouping keys is a valid
+    # clustering). At 100 TB, where the label vector stops being
+    # broadcastable, the planner re-exchanges adj by src per round —
+    # the one fundamental LPA message shuffle — and the agg chain
+    # still rides the join's output partitioning. Width is
+    # edge-derived (loop_parts), not the session conf — every
+    # per-round stage rides this layout, so a small graph no longer
+    # pays core-budget-many tasks per round.
+    adj = pinned_checkpoint(
+        adj, "dst", parts=loop_parts(und, rows=2 * und.count())
+    )
     labels = (
         adj.select(F.col("src").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("label"))
     )
-    if materialize:
-        labels = labels.localCheckpoint(eager=True)
+    labels = labels.localCheckpoint(eager=True)
     for i in range(iterations):
         msgs = adj.join(
             labels.select(F.col("node").alias("src"), "label"), "src"
@@ -1057,14 +1011,13 @@ def lpa_communities(
         # subtree once — the star-loop re-execution blow-up (which
         # references its input ~4×) does not apply — and halves the
         # driver round-trips.
-        if materialize and (i % 2 == 1 or i == iterations - 1):
+        if i % 2 == 1 or i == iterations - 1:
             labels = labels.localCheckpoint(eager=True)
     return labels.select("node", F.col("label").alias("community"))
 
 
 def edge_support(
     edges: DataFrame,
-    materialize: bool = True,
     assume_normalized: bool = False,
 ) -> DataFrame:
     """Per-edge triangle support over an undirected graph: how many
@@ -1093,9 +1046,7 @@ def edge_support(
     if assume_normalized:
         und = edges.select("u", "v")
     else:
-        und = undirected_edges(edges)
-        if materialize:
-            und = und.localCheckpoint(eager=True)
+        und = undirected_edges(edges).localCheckpoint(eager=True)
     deg = (
         und.select(F.explode(F.array("u", "v")).alias("node"))
         .groupBy("node")
@@ -1114,8 +1065,7 @@ def edge_support(
             F.when(low_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
         )
     )
-    if materialize:
-        oriented = oriented.localCheckpoint(eager=True)
+    oriented = oriented.localCheckpoint(eager=True)
     wedges = oriented.select(
         F.col("src").alias("a"), F.col("dst").alias("b")
     ).join(
@@ -1208,7 +1158,6 @@ def adamic_adar(
     edges: DataFrame,
     top_n: int = 50,
     max_degree: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Adamic–Adar link prediction over an undirected graph: for each
     NON-adjacent pair ``(u, v)``, ``AA = Σ_{w ∈ N(u)∩N(v)} 1/ln(deg w)``
@@ -1238,20 +1187,17 @@ def adamic_adar(
     """
     if top_n < 1:
         raise ValueError(f"adamic_adar needs top_n >= 1, got {top_n}")
-    und = undirected_edges(edges)
-    if materialize:
-        und = und.localCheckpoint(eager=True)
+    und = undirected_edges(edges).localCheckpoint(eager=True)
     deg = (
         und.select(F.col("u").alias("node"))
         .unionByName(und.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))
     )
-    if materialize:
-        # node-sized; consumed three times (width agg, centers, the
-        # final score projection) — pin once instead of repeated
-        # edge-sized re-aggregations
-        deg = deg.localCheckpoint(eager=True)
+    # node-sized; consumed three times (width agg, centers, the
+    # final score projection) — pin once instead of repeated
+    # edge-sized re-aggregations
+    deg = deg.localCheckpoint(eager=True)
     if max_degree is not None:
         deg = deg.where(F.col("degree") <= F.lit(int(max_degree)))
     # contribution carried on the center row: one decimal per wedge
@@ -1264,14 +1210,13 @@ def adamic_adar(
     adj = und.select(F.col("u").alias("w"), F.col("v").alias("n")).unionByName(
         und.select(F.col("v").alias("w"), F.col("u").alias("n"))
     )
-    if materialize:
-        # width from the wedge OUTPUT row count (Σ C(deg,2) over the
-        # capped centers), not the adjacency's bytes — see _wedge_parts;
-        # the pinned layout on w serves both self-join legs with zero
-        # further exchanges
-        adj = pinned_checkpoint(
-            adj, "w", parts=_wedge_parts(deg.where(F.col("degree") >= 2))
-        )
+    # width from the wedge OUTPUT row count (Σ C(deg,2) over the
+    # capped centers), not the adjacency's bytes — see _wedge_parts;
+    # the pinned layout on w serves both self-join legs with zero
+    # further exchanges
+    adj = pinned_checkpoint(
+        adj, "w", parts=_wedge_parts(deg.where(F.col("degree") >= 2))
+    )
     wedge = (
         adj.withColumnRenamed("n", "a")
         .join(adj.withColumnRenamed("n", "b"), "w")
@@ -1301,7 +1246,6 @@ def bfs_distances(
     edges: DataFrame,
     seeds: DataFrame,
     max_hops: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """Multi-source BFS hop distances over an undirected graph: the
     minimum number of edges from any seed to each reachable node, capped
@@ -1337,13 +1281,11 @@ def bfs_distances(
     adj = und.select(
         F.col("u").alias("src"), F.col("v").alias("dst")
     ).unionByName(und.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-    if materialize:
-        adj = adj.localCheckpoint(eager=True)
+    adj = adj.localCheckpoint(eager=True)
     dist = seeds.select(F.col("node")).distinct().select(
         "node", F.lit(0).cast("int").alias("dist")
     )
-    if materialize:
-        dist = dist.localCheckpoint(eager=True)
+    dist = dist.localCheckpoint(eager=True)
     # Round-9 (guide §2.5): the per-hop fold's rows are BYTES-light, so
     # AQE's byte-based coalescing ran the fold + checkpoint stage on ~2
     # tasks. A user-numbered keyed repartition (which AQE never
@@ -1352,7 +1294,7 @@ def bfs_distances(
     # scale-adaptive. The frontier join keeps its adaptive broadcast.
     # Round-10 (VERDICT r09 item 1): gated on the width actually
     # exceeding AQE's — see _fold_parts.
-    parts = _fold_parts(adj) if materialize else None
+    parts = _fold_parts(adj)
     for h in range(1, max_hops + 1):
         frontier = dist.where(F.col("dist") == h - 1).select(
             F.col("node").alias("src")
@@ -1366,8 +1308,7 @@ def bfs_distances(
         dist = folded.groupBy("node").agg(
             F.min("dist").cast("int").alias("dist")
         )
-        if materialize:
-            dist = dist.localCheckpoint(eager=True)
+        dist = dist.localCheckpoint(eager=True)
         # 1-row scalar action — frontier-empty exit (reads checkpointed
         # state); a no-op for the result, pure round-skipping.
         if dist.where(F.col("dist") == h).limit(1).count() == 0:
@@ -1379,7 +1320,6 @@ def random_walks(
     edges: DataFrame,
     walk_len: int = 3,
     seed: str = "walk",
-    materialize: bool = True,
 ) -> DataFrame:
     """One DETERMINISTIC random walk of ``walk_len`` steps from every
     node of an undirected graph — the DeepWalk/node2vec positive-pair
@@ -1414,8 +1354,7 @@ def random_walks(
     adj = und.select(
         F.col("u").alias("src"), F.col("v").alias("dst")
     ).unionByName(und.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-    if materialize:
-        adj = adj.localCheckpoint(eager=True)
+    adj = adj.localCheckpoint(eager=True)
     nodes = adj.select(F.col("src").alias("start")).distinct()
     cur = nodes.select("start", F.col("start").alias("node"))
     out = cur.select("start", F.lit(0).cast("int").alias("step"), "node")
@@ -1424,7 +1363,7 @@ def random_walks(
     # md5-CPU-heavy), which AQE's byte-based coalescing otherwise runs
     # on ~2 tasks. Round-10 (VERDICT r09 item 1): gated on the width
     # actually exceeding AQE's — see _fold_parts.
-    parts = _fold_parts(adj) if materialize else None
+    parts = _fold_parts(adj)
     for t in range(1, walk_len + 1):
         draw = F.md5(
             F.concat_ws(
@@ -1448,8 +1387,7 @@ def random_walks(
             .agg(F.min(F.struct("h", "dst")).alias("__pick"))
             .select("start", F.col("__pick.dst").alias("node"))
         )
-        if materialize:
-            cur = cur.localCheckpoint(eager=True)
+        cur = cur.localCheckpoint(eager=True)
         out = out.unionByName(
             cur.select("start", F.lit(t).cast("int").alias("step"), "node")
         )
@@ -1460,7 +1398,6 @@ def neighbor_jaccard(
     edges: DataFrame,
     top_n: int = 50,
     max_degree: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Jaccard link prediction over an undirected graph: for each
     NON-adjacent pair, ``|N(u)∩N(v)| / |N(u)∪N(v)|`` — the set-size-
@@ -1480,7 +1417,7 @@ def neighbor_jaccard(
     """
     if top_n < 1:
         raise ValueError(f"neighbor_jaccard needs top_n >= 1, got {top_n}")
-    candidates = _nonadjacent_common_pairs(edges, max_degree, materialize)
+    candidates = _nonadjacent_common_pairs(edges, max_degree)
     jac = F.round(
         F.col("common_neighbors").cast("double")
         / (
@@ -1503,7 +1440,6 @@ def neighbor_jaccard(
 def _nonadjacent_common_pairs(
     edges: DataFrame,
     max_degree: int | None,
-    materialize: bool,
 ) -> DataFrame:
     """Shared wedge-by-center machinery behind the link-prediction
     family (:func:`neighbor_jaccard`, :func:`salton_cosine`): normalize,
@@ -1511,31 +1447,27 @@ def _nonadjacent_common_pairs(
     common neighbors per endpoint pair, drop pairs that are already
     edges, and join back the TRUE endpoint degrees (the cap bounds
     work, never semantics). → ``(u, v, common_neighbors, du, dv)``."""
-    und = undirected_edges(edges)
-    if materialize:
-        und = und.localCheckpoint(eager=True)
+    und = undirected_edges(edges).localCheckpoint(eager=True)
     deg = (
         und.select(F.col("u").alias("node"))
         .unionByName(und.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))
     )
-    if materialize:
-        # node-sized; consumed four times (width agg, center semi-join,
-        # du, dv) — pin once instead of four edge-sized re-aggregations
-        deg = deg.localCheckpoint(eager=True)
+    # node-sized; consumed four times (width agg, center semi-join,
+    # du, dv) — pin once instead of four edge-sized re-aggregations
+    deg = deg.localCheckpoint(eager=True)
     centers = deg if max_degree is None else deg.where(
         F.col("degree") <= F.lit(int(max_degree))
     )
     adj = und.select(F.col("u").alias("w"), F.col("v").alias("n")).unionByName(
         und.select(F.col("v").alias("w"), F.col("u").alias("n"))
     )
-    if materialize:
-        # width from the wedge OUTPUT row count (Σ C(deg,2) over the
-        # capped centers), not the adjacency's bytes — see _wedge_parts;
-        # the pinned layout on w serves both self-join legs with zero
-        # further exchanges
-        adj = pinned_checkpoint(adj, "w", parts=_wedge_parts(centers))
+    # width from the wedge OUTPUT row count (Σ C(deg,2) over the
+    # capped centers), not the adjacency's bytes — see _wedge_parts;
+    # the pinned layout on w serves both self-join legs with zero
+    # further exchanges
+    adj = pinned_checkpoint(adj, "w", parts=_wedge_parts(centers))
     wedge = (
         adj.withColumnRenamed("n", "a")
         .join(adj.withColumnRenamed("n", "b"), "w")
@@ -1555,7 +1487,6 @@ def salton_cosine(
     edges: DataFrame,
     top_n: int = 50,
     max_degree: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Salton cosine link prediction over an undirected graph: for each
     NON-adjacent pair, ``|N(u)∩N(v)| / √(deg u · deg v)`` — the cosine
@@ -1576,7 +1507,7 @@ def salton_cosine(
     """
     if top_n < 1:
         raise ValueError(f"salton_cosine needs top_n >= 1, got {top_n}")
-    candidates = _nonadjacent_common_pairs(edges, max_degree, materialize)
+    candidates = _nonadjacent_common_pairs(edges, max_degree)
     cos = F.round(
         F.col("common_neighbors").cast("double")
         / F.sqrt((F.col("du") * F.col("dv")).cast("double")),
@@ -1598,7 +1529,6 @@ def landmark_harmonic(
     edges: DataFrame,
     landmarks: DataFrame,
     max_hops: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """Landmark-estimated harmonic centrality over an undirected graph:
     for each node, ``Σ_landmarks 1/d(l, v)`` summed over the landmark
@@ -1638,8 +1568,7 @@ def landmark_harmonic(
     adj = und.select(
         F.col("u").alias("src"), F.col("v").alias("dst")
     ).unionByName(und.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-    if materialize:
-        adj = adj.localCheckpoint(eager=True)
+    adj = adj.localCheckpoint(eager=True)
     dist = (
         landmarks.select(F.col("node"))
         .distinct()
@@ -1649,8 +1578,7 @@ def landmark_harmonic(
             F.lit(0).cast("int").alias("dist"),
         )
     )
-    if materialize:
-        dist = dist.localCheckpoint(eager=True)
+    dist = dist.localCheckpoint(eager=True)
     # Round-9 (guide §2.5): per-hop state is ROWS-heavy but BYTES-light
     # (three ints per (landmark, node) pair), so AQE's byte-based
     # coalescing ran the min-fold + checkpoint stage on 2 tasks
@@ -1661,7 +1589,7 @@ def landmark_harmonic(
     # the components loops; scale-adaptive, not a local[32] constant.
     # Round-10 (VERDICT r09 item 1): gated on the width actually
     # exceeding AQE's — see _fold_parts.
-    parts = _fold_parts(adj) if materialize else None
+    parts = _fold_parts(adj)
     for h in range(1, max_hops + 1):
         frontier = dist.where(F.col("dist") == h - 1).select(
             "lm", F.col("node").alias("src")
@@ -1679,8 +1607,7 @@ def landmark_harmonic(
         dist = folded.groupBy("lm", "node").agg(
             F.min("dist").cast("int").alias("dist")
         )
-        if materialize:
-            dist = dist.localCheckpoint(eager=True)
+        dist = dist.localCheckpoint(eager=True)
         # 1-row scalar action — frontier-empty exit (pure round-skip;
         # BFS layers are monotone so the unrolled oracle is unchanged).
         if dist.where(F.col("dist") == h).limit(1).count() == 0:
@@ -1699,7 +1626,6 @@ def cheapest_paths(
     seeds: DataFrame,
     weight_col: str = "w",
     max_hops: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """Multi-source CHEAPEST path costs within ``max_hops`` over an
     undirected weighted graph — the min-plus (tropical semiring) twin of
@@ -1735,18 +1661,16 @@ def cheapest_paths(
             F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
         )
     ).groupBy("src", "dst").agg(F.min("w").alias("w"))
-    if materialize:
-        adj = adj.localCheckpoint(eager=True)
+    adj = adj.localCheckpoint(eager=True)
     cost = seeds.select(F.col("node")).distinct().select(
         "node", F.lit(0).cast("long").alias("cost")
     )
-    if materialize:
-        cost = cost.localCheckpoint(eager=True)
+    cost = cost.localCheckpoint(eager=True)
     # Round-9 (guide §2.5): row-derived fold width — see bfs_distances;
     # AQE's byte-based coalescing otherwise runs the min-plus fold +
     # checkpoint stage on ~2 tasks. Round-10 (VERDICT r09 item 1):
     # gated on the width actually exceeding AQE's — see _fold_parts.
-    parts = _fold_parts(adj) if materialize else None
+    parts = _fold_parts(adj)
     frontier = cost
     for _ in range(max_hops):
         relaxed = (
@@ -1760,8 +1684,7 @@ def cheapest_paths(
         if parts is not None:
             folded = folded.repartition(parts, F.col("node"))
         nxt = folded.groupBy("node").agg(F.min("cost").alias("cost"))
-        if materialize:
-            nxt = nxt.localCheckpoint(eager=True)
+        nxt = nxt.localCheckpoint(eager=True)
         # next round's frontier: nodes whose settled cost IMPROVED (new
         # or cheaper) — only they can relax their neighbors further
         frontier = nxt.join(
@@ -1769,8 +1692,7 @@ def cheapest_paths(
         ).where(
             F.col("__old").isNull() | (F.col("cost") < F.col("__old"))
         ).select("node", "cost")
-        if materialize:
-            frontier = frontier.localCheckpoint(eager=True)
+        frontier = frontier.localCheckpoint(eager=True)
         cost = nxt
         # 1-row scalar action — nothing improved, later rounds are no-ops
         if frontier.limit(1).count() == 0:
@@ -1778,9 +1700,7 @@ def cheapest_paths(
     return cost
 
 
-def rich_club(
-    edges: DataFrame, k_values: list[int], materialize: bool = True
-) -> DataFrame:
+def rich_club(edges: DataFrame, k_values: list[int]) -> DataFrame:
     """Rich-club coefficient at each degree threshold k: the density of
     the subgraph induced by nodes with degree > k —
     ``φ(k) = 2·E_k / (N_k·(N_k−1))`` (Colizza et al. 2006, public).
@@ -1803,21 +1723,19 @@ def rich_club(
     if not k_values:
         raise ValueError("rich_club needs at least one k threshold")
     und = undirected_edges(edges)
-    if materialize:
-        # Round-9 optimization (guide §2.4): ``und`` is referenced three
-        # times (both degree-union legs + the annotated edge join) and
-        # ``deg`` three times (the N_k count + both endpoint joins) —
-        # without pinning, the upstream edge build re-executes per
-        # reference (measured 40 Exchanges in the registry query's plan).
-        und = und.localCheckpoint(eager=True)
+    # Round-9 optimization (guide §2.4): ``und`` is referenced three
+    # times (both degree-union legs + the annotated edge join) and
+    # ``deg`` three times (the N_k count + both endpoint joins) —
+    # without pinning, the upstream edge build re-executes per
+    # reference (measured 40 Exchanges in the registry query's plan).
+    und = und.localCheckpoint(eager=True)
     deg = (
         und.select(F.col("u").alias("node"))
         .unionByName(und.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))
     )
-    if materialize:
-        deg = deg.localCheckpoint(eager=True)
+    deg = deg.localCheckpoint(eager=True)
     spark = edges.sparkSession
     ks = spark.createDataFrame(
         [(int(k),) for k in sorted(set(k_values))], "k long"

@@ -759,7 +759,6 @@ def pareto_frontier_2d(
     cost_col: str,
     gain_col: str,
     rank_partitions: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """2-D Pareto frontier (skyline): rows not dominated by any other —
     no row with ``cost ≤`` AND ``gain ≥`` that is strictly better on at
@@ -779,27 +778,14 @@ def pareto_frontier_2d(
 
     The range partitioning is ``localCheckpoint``-pinned before the two
     consuming branches for the same reason documented in
-    ``build_vocab``: both branches must provably see one partitioning.
-    ``materialize=False`` skips the pin for plan-shape tests ONLY — a
-    re-evaluated ``repartitionByRange`` may sample non-identical
+    ``build_vocab``: both branches must provably see one partitioning —
+    a re-evaluated ``repartitionByRange`` may sample non-identical
     boundaries, giving the branches inconsistent ``__pid`` values and a
-    wrong frontier; a ``RuntimeWarning`` is emitted to make the
-    contract enforceable, not just documented (ADVICE r05).
+    wrong frontier.
 
     Ties: equal (cost, gain) duplicates are mutually non-dominating and
     all survive — matching the NOT EXISTS oracle exactly.
     """
-    if not materialize:
-        import warnings
-
-        warnings.warn(
-            "pareto_frontier_2d(materialize=False) is for plan-shape tests "
-            "only: without the localCheckpoint pin a re-evaluated "
-            "repartitionByRange can sample different boundaries per branch "
-            "and produce a WRONG frontier",
-            RuntimeWarning,
-            stacklevel=2,
-        )
     spark = df.sparkSession
     n_part = rank_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions", "32")
@@ -810,8 +796,7 @@ def pareto_frontier_2d(
     ranged = per_cost.repartitionByRange(
         n_part, F.col("__cost")
     ).withColumn("__pid", F.spark_partition_id())
-    if materialize:
-        ranged = ranged.localCheckpoint(eager=True)
+    ranged = ranged.localCheckpoint(eager=True)
     lw = (
         Window.partitionBy("__pid")
         .orderBy("__cost")

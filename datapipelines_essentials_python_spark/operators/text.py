@@ -375,7 +375,6 @@ def pack_chunk_spans(
     budget_tokens: int = 2048,
     shard_col: str | None = None,
     rank_partitions: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Concat-and-chunk packing with document SPLITTING — the span table a
     pretraining-data writer materializes. Documents are laid end-to-end in
@@ -400,9 +399,8 @@ def pack_chunk_spans(
     ever holds more than 1/``rank_partitions`` of the corpus regardless
     of shard skew. The range exchange is pinned with an eager
     localCheckpoint before fan-out for the same recompute-divergence
-    reason documented in :func:`build_vocab` (``materialize=False`` only
-    for plan-shape tests). Chunk fan-out is a per-row ``sequence`` +
-    ``explode`` — a document with n tokens yields at most
+    reason documented in :func:`build_vocab`. Chunk fan-out is a per-row
+    ``sequence`` + ``explode`` — a document with n tokens yields at most
     ``n/budget + 1`` spans, so the explode is bounded and local.
     Zero-token documents (empty/whitespace-only text) occupy no stream
     positions and are omitted from the span table, same as the SQL
@@ -430,8 +428,7 @@ def pack_chunk_spans(
     ranged = toks.repartitionByRange(
         n_part, F.col("__shard"), F.col("__id")
     ).withColumn("__pid", F.spark_partition_id())
-    if materialize:
-        ranged = ranged.localCheckpoint(eager=True)
+    ranged = ranged.localCheckpoint(eager=True)
     lw = (
         Window.partitionBy("__pid", "__shard")
         .orderBy("__id")
@@ -708,7 +705,6 @@ def build_vocab(
     text_col: str = "text",
     top_k: int | None = None,
     rank_partitions: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Corpus vocabulary with coverage accounting: token → count, frequency
     rank (count desc, token asc — a total order), cumulative count, and
@@ -749,14 +745,11 @@ def build_vocab(
     # eager localCheckpoint pins one partitioning and truncates lineage,
     # making recompute-divergence impossible rather than merely unlikely
     # (on executor loss the job fails loudly instead of silently
-    # re-sampling new boundaries). ``materialize=False`` skips the pin so
-    # plan-shape tests can inspect the pre-checkpoint logical plan — the
-    # checkpoint hides the range exchange from explain() by design.
+    # re-sampling new boundaries).
     ranged = counts.repartitionByRange(
         n_part, F.col("cnt").desc(), F.col("token")
     ).withColumn("__pid", F.spark_partition_id())
-    if materialize:
-        ranged = ranged.localCheckpoint(eager=True)
+    ranged = ranged.localCheckpoint(eager=True)
     lw = Window.partitionBy("__pid").orderBy(F.col("cnt").desc(), F.col("token"))
     local = ranged.select(
         "token",

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datapipelines_essentials_python_spark.functions.audit import source_file_name
 from datapipelines_essentials_python_spark.functions.hashing import row_hash_md5
 from datapipelines_essentials_python_spark.operators.cdc import merge_cdc, snapshot
 from datapipelines_essentials_python_spark.operators.flatten import (
@@ -47,10 +48,9 @@ def with_study_audit(df: DataFrame, ts: str) -> DataFrame:
     hashes the raw XML before injecting audit elements), and the batch
     timestamp (the reference pins one ``CAST('{ts}' AS TIMESTAMP)`` per
     run, ``clinical_trial.json:17-19``)."""
-    decoded = F.url_decode(F.regexp_replace(F.input_file_name(), r"\+", "%2B"))
     payload = [c for c in df.columns]
     return (
-        df.withColumn("xml_file_name", F.element_at(F.split(decoded, "/"), -1))
+        df.withColumn("xml_file_name", source_file_name())
         .withColumn("hashcode", row_hash_md5(df, payload))
         .withColumn("spark_timestamp", F.lit(ts).cast("timestamp"))
         .withColumn("pk_nct_id", F.col("id_info.nct_id"))
@@ -62,8 +62,9 @@ def study_cdc(
 ) -> tuple[DataFrame, DataFrame]:
     """(delta, active snapshot) of ``incoming`` vs ``staging`` — the
     reference's ``identify_new_records`` + ``add_row_number_to_dataframe``
-    sequence (``clinical_trial_etl.py:180-212``)."""
-    delta = merge_cdc(staging, incoming, PK_COLS)
+    sequence (``clinical_trial_etl.py:180-212``). Each incoming row is
+    compared with the latest staged row of its key (SURVEY §2.9 step 3)."""
+    delta = merge_cdc(staging, incoming, PK_COLS, ORDER_COLS)
     full = (
         delta
         if staging is None

@@ -4942,7 +4942,7 @@ JOIN fences f ON f.event_type = d.event_type AND f.dow = d.dow
 """
 
 
-# Hilbert-curve layout key — mirrors hashing.hilbert_key(bits=10): the
+# Hilbert-curve layout key — mirrors hashing.with_hilbert_key(bits=10): the
 # xy->d rotate-and-fold walk unrolled one CTE per level. Reflection is
 # over the FULL grid side n-1 (coordinates still carry high bits at
 # lower levels); quadrant = CASE(rx) (3-ry | ry), the Gray-code index.

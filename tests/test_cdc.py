@@ -51,6 +51,31 @@ def test_old_side_deduped_to_latest(spark):
     assert merge_cdc(old, new, ["id"], order_cols=["ver"]).count() == 0
 
 
+def test_study_cdc_compares_with_the_latest_staged_row(spark):
+    """Staging holds study N1 twice (hash A, then the later hash B); a
+    re-sent N1 with hash B is unchanged against its latest staged row and
+    yields no delta row. Diffing against every staged row would re-send
+    it as an update."""
+    from datetime import datetime
+
+    from datapipelines_essentials_python_spark.pipelines.clinical_trial import (
+        study_cdc,
+    )
+
+    schema = (
+        "pk_nct_id string, xml_file_name string, hashcode string, "
+        "spark_timestamp timestamp"
+    )
+    t1, t2, t3 = (datetime(2024, 1, d) for d in (1, 2, 3))
+    staging = spark.createDataFrame(
+        [("N1", "N1.xml", "A", t1), ("N1", "N1.xml", "B", t2)], schema
+    )
+    incoming = spark.createDataFrame([("N1", "N1.xml", "B", t3)], schema)
+    delta, active = study_cdc(staging, incoming)
+    assert delta.count() == 0
+    assert [r["hashcode"] for r in active.collect()] == ["B"]
+
+
 def test_snapshot(spark):
     df = _df(spark, [(1, "a", 1), (1, "b", 2), (2, "c", 1)])
     snap = {r["id"]: r["val"] for r in snapshot(df, ["id"], ["ver"]).collect()}

@@ -1,5 +1,6 @@
 """Native Column function library (SURVEY §2.8 / §2.12)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from datapipelines_essentials_python_spark.functions.datetime_fns import (
@@ -15,8 +16,14 @@ from datapipelines_essentials_python_spark.functions.durations import (
     total_time_and_difficulty,
 )
 from datapipelines_essentials_python_spark.functions.lookup import lookup_codes, lookup_join
-from datapipelines_essentials_python_spark.functions.nulls import is_null_or_blank, nvl
+from datapipelines_essentials_python_spark.functions.nulls import (
+    is_null_or_blank,
+    null_between,
+    nvl,
+)
 from datapipelines_essentials_python_spark.functions.strings import (
+    anti_trim,
+    multi_equals,
     remove_non_word_characters,
     single_space,
 )
@@ -128,3 +135,30 @@ def test_string_helpers(spark):
     ).collect()[0]
     assert row["ss"] == "a b c!!"
     assert row["rw"] == "  a   b  c "
+
+
+def test_anti_trim_keeps_only_outer_whitespace(spark):
+    df = spark.createDataFrame([("  ab cd \t",), ("xy",)], "s string")
+    out = [r["v"] for r in df.select(anti_trim("s").alias("v")).collect()]
+    assert out == ["   \t", ""]
+
+
+def test_multi_equals_needs_every_column(spark):
+    df = spark.createDataFrame([(1, 1), (1, 2), (1, None)], "a int, b int")
+    out = [r["v"] for r in df.select(multi_equals(1, "a", "b").alias("v")).collect()]
+    assert out == [True, False, None]
+    with pytest.raises(ValueError, match="at least one column"):
+        multi_equals(1)
+
+
+def test_null_between_open_bounds(spark):
+    df = spark.createDataFrame(
+        [(5, 1, 9), (5, None, 9), (5, 6, None), (5, None, None), (None, 1, 9)],
+        "c int, lo int, hi int",
+    )
+    out = [
+        r["v"] for r in df.select(null_between("c", "lo", "hi").alias("v")).collect()
+    ]
+    # a NULL bound is unbounded on its side; both NULL and a NULL value
+    # are never between
+    assert out == [True, True, False, False, False]

@@ -148,13 +148,6 @@ def test_pagerank_tol_early_exit_on_converged_graph(spark, monkeypatch):
     assert calls["n"] == 10
 
 
-def test_pagerank_tol_requires_materialize(spark):
-    with pytest.raises(ValueError):
-        graph.pagerank(
-            _edges(spark, [("a", "b")]), iterations=2, tol=1e-6, materialize=False
-        )
-
-
 def test_pagerank_step_plan_two_data_shuffles(spark):
     """Plan guard for the docstring's scale contract: one step over
     checkpointed state shuffles the EDGE list (the only table-sized
@@ -189,35 +182,30 @@ def test_pagerank_step_plan_two_data_shuffles(spark):
     assert len(re.findall(r"\(\d+\) Exchange", plan)) <= 8
 
 
-def test_hits_half_step_plan_no_cartesian_one_broadcast_norm(spark):
+def test_hits_half_step_plan_no_cartesian_one_broadcast_norm(spark, pinned_plans):
     """Plan guard for the HITS half-step over checkpointed state: the
-    edge list (the only table-sized relation) shuffles at most once per
-    half-step, the L2 norm arrives as a broadcast 1-row aggregate, and
-    nothing degenerates to a cartesian product."""
-    import io as _io
+    edge list (the only table-sized relation) shuffles once per
+    half-step, on that half-step's join key, the L2 norm arrives as a
+    broadcast 1-row aggregate, and nothing degenerates to a cartesian
+    product. Every half-step is pinned, so the plans are read from the
+    pins as they execute."""
     import re
-    import contextlib
 
-    edges = _edges(
-        spark, [("h", "a1"), ("h", "a2"), ("g", "a1")]
-    ).localCheckpoint(eager=True)
-    out = graph.hits(edges, iterations=1, materialize=False)
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
-    assert "CartesianProduct" not in plan
-    # 2 half-steps → 2 broadcast norms; the final nodes⋈hub⋈auth joins
-    # may broadcast too, so bound rather than pin
-    assert len(re.findall(r"\(\d+\) BroadcastExchange", plan)) >= 2
-    # Each half-step shuffles edges ONCE on its join key — but without
-    # materialize the auth subtree is replayed 3× (hub join input, hub
-    # norm branch, final join), so the printed plan shows up to 3 copies
-    # of its src exchange plus the final-join replays; bound at 6. A
-    # regression adding a second per-half-step edge shuffle would scale
-    # every replayed copy and blow through this.
-    assert 1 <= plan.count("hashpartitioning(src#") <= 6
-    assert 1 <= plan.count("hashpartitioning(dst#") <= 6
+    edges = _edges(spark, [("h", "a1"), ("h", "a2"), ("g", "a1")])
+    graph.hits(edges, iterations=1).collect()
+    assert not any("CartesianProduct" in p for p in pinned_plans)
+    # the raw (pre-norm) sums: authorities join the edges on src, hubs
+    # on dst — one edge exchange each, keyed on that half-step's key
+    auth_raw, hub_raw = [p for p in pinned_plans if "ShuffledHashJoin" in p]
+    assert auth_raw.count("hashpartitioning(src#") == 1
+    assert "hashpartitioning(dst#" not in auth_raw
+    assert hub_raw.count("hashpartitioning(dst#") == 1
+    assert "hashpartitioning(src#" not in hub_raw
+    # the normalized outputs: exactly one broadcast (the 1-row norm) each
+    normed = [p for p in pinned_plans if "BroadcastNestedLoopJoin" in p]
+    assert len(normed) == 2
+    for p in normed:
+        assert len(re.findall(r"\(\d+\) BroadcastExchange", p)) == 1
 
 
 def test_weighted_pagerank_uniform_weights_equal_unweighted(spark):

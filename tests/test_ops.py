@@ -1,8 +1,10 @@
-"""Ops layer: spark-submit builder/pool, logging, env detection, mockup data."""
+"""Ops layer: spark-submit builder/pool, logging, env detection, mockup data,
+and the session and repartition sizing helpers."""
 
 import logging
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datapipelines_essentials_python_spark.ops.environment import (
@@ -10,7 +12,11 @@ from datapipelines_essentials_python_spark.ops.environment import (
     Environment,
     detect_environment,
 )
-from datapipelines_essentials_python_spark.ops.logging_util import audit_action, init_logging
+from datapipelines_essentials_python_spark.ops.logging_util import (
+    KafkaLogHandler,
+    audit_action,
+    init_logging,
+)
 from datapipelines_essentials_python_spark.ops.mockup_data import (
     generate_dataframe,
     generate_rows,
@@ -20,6 +26,10 @@ from datapipelines_essentials_python_spark.ops.spark_submit import (
     SparkSubmitCommand,
     backfill_commands,
     run_execution_pool,
+)
+from datapipelines_essentials_python_spark.session import revise_shuffle_partitions
+from datapipelines_essentials_python_spark.utils.repartition import (
+    data_frame_repartition,
 )
 
 
@@ -126,3 +136,42 @@ def test_mockup_dataframe(spark):
     df = generate_dataframe(spark, schema, n_rows=25, seed=3)
     assert df.count() == 25
     assert df.schema == schema
+
+
+def test_kafka_log_handler_without_kafka_raises_import_error(monkeypatch):
+    import sys
+
+    monkeypatch.setitem(sys.modules, "kafka", None)  # import kafka fails
+    with pytest.raises(ImportError, match="kafka-python"):
+        KafkaLogHandler("topic", "localhost:9092")
+
+
+def test_revise_shuffle_partitions_sets_executors_times_cores(spark):
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    try:
+        assert revise_shuffle_partitions(spark, 3, executors=2, cores=4) == 24
+        assert spark.conf.get(key) == "24"
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_data_frame_repartition_modes(spark):
+    df = spark.range(40).repartition(4)
+    # only a count: coalesce, a narrow step
+    assert data_frame_repartition(df, 2).rdd.getNumPartitions() == 2
+    # columns: a hash repartition, so equal keys share a partition
+    keyed = data_frame_repartition(
+        df.withColumn("k", F.col("id") % 3), 5, columns=["k"]
+    )
+    assert keyed.rdd.getNumPartitions() == 5
+    per_key = keyed.select("k", F.spark_partition_id().alias("p")).distinct()
+    assert per_key.groupBy("k").count().where("count > 1").count() == 0
+    # columns + salt: the same rows, spread over the requested partitions
+    salted = data_frame_repartition(
+        df.withColumn("k", F.lit(1)), 4, columns=["k"], salt_buckets=4
+    )
+    assert salted.rdd.getNumPartitions() == 4
+    assert sorted(r["id"] for r in salted.collect()) == list(range(40))
+    # neither: the frame itself
+    assert data_frame_repartition(df) is df

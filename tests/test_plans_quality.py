@@ -399,38 +399,28 @@ def test_asof_forward_uses_running_frame(spark):
     assert "unboundedfollowing" not in plan
 
 
-def test_build_vocab_two_level_rank(spark):
+def test_build_vocab_two_level_rank(spark, pinned_plans):
     """Vocabulary ranking is range-partitioned two-level: every window spec
     is partitioned (by the range-partition id), never a single-partition
-    global window over the vocabulary. The range exchange itself is only
-    visible pre-materialization (the production path eagerly
-    localCheckpoints it so both consumers provably share ONE partitioning
-    — ADVICE r04), so the shape is asserted via the inspection hook and
-    the checkpoint's presence via the production plan."""
+    global window over the vocabulary. The range exchange runs inside the
+    eager localCheckpoint that pins it (so both consumers provably share
+    ONE partitioning — ADVICE r04), so its shape is read from the pinned
+    plan and the windows from the production plan above the pin."""
     import re
 
-    from datapipelines_essentials_python_spark.operators.text import build_vocab
-    from datapipelines_essentials_python_spark.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    lazy_plan = plan_of(build_vocab(docs, "text", top_k=50, materialize=False))
-    assert "rangepartitioning(cnt" in lazy_plan
-    specs = re.findall(r"windowspecdefinition\(([^)]*)\)", lazy_plan)
+    prod_plan = plan_of(entry_mod.queries()["vocab_coverage"](spark, SF_DIR))
+    # exactly one pin, and it holds the range exchange on the rank order
+    assert sum("rangepartitioning(cnt" in p for p in pinned_plans) == 1
+    # the ranked stage reads the pinned (checkpointed) RDD, and its
+    # windows stay __pid-partitioned
+    assert "existingrdd" in prod_plan.lower()
+    specs = re.findall(r"windowspecdefinition\(([^)]*)\)", prod_plan)
     assert specs, "expected ranking window specs in the vocab plan"
     for spec in specs:
         assert "__pid" in spec, f"unpartitioned window spec: {spec}"
 
-    # production path: the ranked stage reads a pinned (checkpointed) RDD,
-    # and its windows stay __pid-partitioned
-    prod_plan = plan_of(entry_mod.queries()["vocab_coverage"](spark, SF_DIR))
-    assert "existingrdd" in prod_plan.lower()
-    prod_specs = re.findall(r"windowspecdefinition\(([^)]*)\)", prod_plan)
-    assert prod_specs
-    for spec in prod_specs:
-        assert "__pid" in spec, f"unpartitioned window spec: {spec}"
 
-
-def test_pack_chunk_spans_two_level_offsets(spark):
+def test_pack_chunk_spans_two_level_offsets(spark, pinned_plans):
     """Chunk-span packing never funnels a shard through one partition:
     the running token offset is range-partitioned two-level (same scheme
     as build_vocab), so every window spec is partitioned by the range
@@ -438,26 +428,13 @@ def test_pack_chunk_spans_two_level_offsets(spark):
     eager localCheckpoint before the two consumers branch."""
     import re
 
-    from datapipelines_essentials_python_spark.operators.text import (
-        pack_chunk_spans,
-    )
-    from datapipelines_essentials_python_spark.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    lazy_plan = plan_of(
-        pack_chunk_spans(docs, "doc_id", shard_col="lang", materialize=False)
-    )
-    assert "rangepartitioning(__shard" in lazy_plan
-    specs = re.findall(r"windowspecdefinition\(([^)]*)\)", lazy_plan)
+    prod_plan = plan_of(entry_mod.queries()["pack_chunk_spans"](spark, SF_DIR))
+    # exactly one pin, and it holds the (shard, id) range exchange
+    assert sum("rangepartitioning(__shard" in p for p in pinned_plans) == 1
+    assert "existingrdd" in prod_plan.lower()
+    specs = re.findall(r"windowspecdefinition\(([^)]*)\)", prod_plan)
     assert specs, "expected running-sum window specs in the packing plan"
     for spec in specs:
-        assert "__pid" in spec, f"unpartitioned window spec: {spec}"
-
-    prod_plan = plan_of(entry_mod.queries()["pack_chunk_spans"](spark, SF_DIR))
-    assert "existingrdd" in prod_plan.lower()
-    prod_specs = re.findall(r"windowspecdefinition\(([^)]*)\)", prod_plan)
-    assert prod_specs
-    for spec in prod_specs:
         assert "__pid" in spec, f"unpartitioned window spec: {spec}"
 
 

@@ -126,16 +126,14 @@ def test_time_weighted_mean_null_value_holds_through(spark):
     assert r["twa"] == pytest.approx(15.0)
 
 
-def test_pareto_frontier_materialize_false_warns(spark):
-    """materialize=False skips the partitioning pin and is only safe for
-    plan-shape tests — the contract is enforced with a RuntimeWarning."""
+def test_pareto_frontier_emits_no_warning(spark):
+    """The range partitioning is always pinned, so the sweep has no
+    unsafe mode left to warn about."""
     import warnings
 
     df = spark.createDataFrame([(1.0, 1.0)], "cost double, gain double")
-    with pytest.warns(RuntimeWarning, match="plan-shape tests"):
-        relational.pareto_frontier_2d(df, "cost", "gain", materialize=False)
     with warnings.catch_warnings():
-        warnings.simplefilter("error")  # default path must stay silent
+        warnings.simplefilter("error")
         relational.pareto_frontier_2d(df, "cost", "gain")
 
 

@@ -14,6 +14,8 @@
 
 from __future__ import annotations
 
+from collections import deque
+
 from pyspark.sql import functions as F
 
 from datapipelines_essentials_python_spark.operators import graph
@@ -87,22 +89,30 @@ def test_fold_parts_gates_small_widths(spark):
     assert graph._fold_parts(small, rows=400_001) == want
 
 
-def test_bfs_results_identical_with_and_without_materialize(spark):
-    """The gated fold path (materialize=True) and the pure-plan path
-    agree — the gate changes scheduling, never results."""
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (2, 6)],
-        "src long, dst long",
-    )
+def test_bfs_distances_match_python_bfs(spark):
+    """The gated fold path agrees with a plain breadth-first search over
+    the undirected adjacency — the gate changes scheduling, never
+    results."""
+    pairs = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (2, 6)]
+    edges = spark.createDataFrame(pairs, "src long, dst long")
     seeds = spark.createDataFrame([(1,)], "node long")
     got = {
         r["node"]: r["dist"]
         for r in graph.bfs_distances(edges, seeds, max_hops=3).collect()
     }
-    want = {
-        r["node"]: r["dist"]
-        for r in graph.bfs_distances(
-            edges, seeds, max_hops=3, materialize=False
-        ).collect()
-    }
-    assert got == want and got[1] == 0 and got[2] == 1
+
+    adj: dict[int, set[int]] = {}
+    for a, b in pairs:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    want = {1: 0}
+    queue = deque([1])
+    while queue:
+        n = queue.popleft()
+        if want[n] == 3:
+            continue
+        for m in sorted(adj[n] - want.keys()):
+            want[m] = want[n] + 1
+            queue.append(m)
+    assert got == want
+    assert want == {1: 0, 2: 1, 3: 2, 6: 2, 4: 3, 5: 3}

@@ -154,14 +154,16 @@ def test_lpa_validates_iterations(spark):
         graph.lpa_communities(edges, iterations=0)
 
 
-def test_lpa_round_plan_no_window_no_cartesian(spark):
+def test_lpa_round_plan_no_window_no_cartesian(spark, pinned_plans):
     """Plan guard: one LPA round is joins + combinable aggregates — no
-    per-node sort window, no cartesian product."""
+    per-node sort window, no cartesian product. The round's labels are
+    pinned, so its plan is read from the pin."""
     edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
-    out = graph.lpa_communities(edges, iterations=1, materialize=False)
-    plan = _plan(out).lower()
-    assert "cartesianproduct" not in plan
-    assert "window" not in plan
+    out = graph.lpa_communities(edges, iterations=1)
+    assert "join" in pinned_plans[-1].lower()  # the round's own pin
+    for plan in [*pinned_plans, _plan(out)]:
+        assert "cartesianproduct" not in plan.lower()
+        assert "window" not in plan.lower()
 
 
 # ---------------------------------------------------- exact-substring dedup
@@ -257,19 +259,21 @@ def test_exact_substring_dedup_validates_window(spark):
         exact_substring_dedup(docs, window_size=1)
 
 
-def test_exact_substring_dedup_plan_no_python(spark):
+def test_exact_substring_dedup_plan_no_python(spark, pinned_plans):
     """The whole pipeline is JVM-side: no BatchEvalPython / ArrowEval in
-    the plan, and the corpus-wide shuffle key is the md5 fingerprint."""
+    the plan, and the corpus-wide shuffle key is the md5 fingerprint.
+    The fingerprint build runs inside the fp-keyed pin, so it is read
+    from the pinned plan; the rest from the final plan."""
     docs = spark.createDataFrame(
         [(1, "a b c d e"), (2, "a b c d e")], "doc_id long, text string"
     )
-    # materialize=False = plan-shape mode: the round-9 fp-keyed pinned
-    # checkpoint otherwise executes the fingerprint build eagerly and the
-    # final plan reads Scan ExistingRDD (md5 invisible to this assert)
-    plan = _plan(exact_substring_dedup(docs, window_size=4, materialize=False))
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEval" not in plan
-    assert "md5" in plan.lower()
+    out = exact_substring_dedup(docs, window_size=4)
+    (pinned,) = pinned_plans
+    assert "md5" in pinned.lower()
+    assert "hashpartitioning(fp#" in pinned
+    for plan in (pinned, _plan(out)):
+        assert "BatchEvalPython" not in plan
+        assert "ArrowEval" not in plan
 
 
 # -------------------------------------------------------- edge support

@@ -8,10 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from datapipelines_essentials_python_spark.functions.hashing import (
-    hilbert_key,
-    with_hilbert_key,
-)
+from datapipelines_essentials_python_spark.functions.hashing import with_hilbert_key
 from datapipelines_essentials_python_spark.operators import graph
 from datapipelines_essentials_python_spark.operators.dedup import (
     threshold_sensitivity,
@@ -63,13 +60,6 @@ def test_hilbert_is_bijective_with_unit_steps(spark):
     for d in range(n * n - 1):
         (x1, y1), (x2, y2) = by_d[d], by_d[d + 1]
         assert abs(x1 - x2) + abs(y1 - y2) == 1, d
-
-
-def test_hilbert_column_form_refuses(spark):
-    """The pure-Column form is a documented trap (exponential tree) —
-    it must fail loudly, pointing at the DataFrame transform."""
-    with pytest.raises(NotImplementedError, match="with_hilbert_key"):
-        hilbert_key("x", "y", bits=10)
 
 
 # ------------------------------------------------- Salton cosine

@@ -7,12 +7,12 @@ repo whose code should produce the plan (the round's ``_before`` files
 come from a pristine HEAD worktree, the ``_after`` files from the
 working tree), with ``SPARK_GRAFT_SF_DIR`` pointing at the data tier.
 
-For ITERATIVE operators that materialize per-iteration checkpoints the
-final plan is mostly ``Scan ExistingRDD``; what matters there is the
-shape of ONE iteration, which these operators expose via their
-``materialize=False`` plan-shape mode — the registry query still runs
-its normal path, so the captured plan documents exactly what the bench
-executes (checkpoint scans included).
+For ITERATIVE operators that pin per-iteration checkpoints the final
+plan is mostly ``Scan ExistingRDD``: the captured plan documents exactly
+what the bench executes (checkpoint scans included), not the shape of
+one iteration. That shape is in the plan of each pinned frame; the
+``pinned_plans`` fixture in ``tests/conftest.py`` records those by
+wrapping ``localCheckpoint``.
 """
 
 from __future__ import annotations
