@@ -629,26 +629,32 @@ def embedding_neardup_pairs(
     cutting the join quadratically.
     """
     from datapipelines_essentials_python_spark.operators.similarity import (
-        cosine_similarity,
+        cosine_from_norms,
         hyperplane_bucket,
+        norm,
+        vector_dim,
     )
 
-    base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    # each row's norm once, not twice per pair it joins into
+    base = df.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("v"), norm(F.col(vec_col)).alias("n")
+    )
     if bucket_planes > 0:
-        base = base.withColumn("bkt", hyperplane_bucket(F.col("v"), bucket_planes))
+        dim = vector_dim(df, vec_col)
+        base = base.withColumn("bkt", hyperplane_bucket(F.col("v"), bucket_planes, dim))
     lhs = base.select(
-        F.col("id").alias("id_a"), F.col("v").alias("v_a"),
+        F.col("id").alias("id_a"), F.col("v").alias("v_a"), F.col("n").alias("n_a"),
         *( [F.col("bkt").alias("bkt_a")] if bucket_planes > 0 else [] ),
     )
     rhs = base.select(
-        F.col("id").alias("id_b"), F.col("v").alias("v_b"),
+        F.col("id").alias("id_b"), F.col("v").alias("v_b"), F.col("n").alias("n_b"),
         *( [F.col("bkt").alias("bkt_b")] if bucket_planes > 0 else [] ),
     )
     cond = lhs["id_a"] < rhs["id_b"]
     if bucket_planes > 0:
         cond = cond & (lhs["bkt_a"] == rhs["bkt_b"])
     pairs = lhs.join(rhs, cond)
-    sim = cosine_similarity(F.col("v_a"), F.col("v_b"))
+    sim = cosine_from_norms(F.col("v_a"), F.col("v_b"), F.col("n_a"), F.col("n_b"))
     return pairs.select(
         "id_a", "id_b", F.round(sim, 6).alias("cosine")
     ).where(F.col("cosine") >= threshold)

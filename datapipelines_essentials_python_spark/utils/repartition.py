@@ -85,13 +85,16 @@ def pinned_checkpoint(df: DataFrame, *keys, parts: int | None = None) -> DataFra
     re-compute the upstream projection feeding its exchange; inside an
     iterative loop, every iteration re-shuffles the big side).
     Materializing under :func:`static_loop_planning` keeps the hash
-    layout visible: every consumer keyed on ``keys`` (or a superset)
-    satisfies its required distribution with zero further exchanges.
-    ``parts`` defaults to the session's ``spark.sql.shuffle.partitions``
-    (the session factory sizes it from the core budget); loops pass
-    :func:`loop_parts`, and wedge self-joins a width derived from their
-    OUTPUT row count, since the exploding stage's input bytes
-    under-state its work."""
+    layout visible when ``parts`` > 1: an aggregate, distinct or join
+    keyed on ``keys`` (or a superset) reads the pinned side without a
+    further exchange, provided a join's other side has as many
+    partitions. At ``parts=1`` (what :func:`loop_parts` gives below 100k
+    rows) the pin is ``SinglePartition``, not a hash layout, and a join
+    against it re-shuffles both sides. ``parts`` defaults to the
+    session's ``spark.sql.shuffle.partitions`` (the session factory
+    sizes it from the core budget); loops pass :func:`loop_parts`, and
+    wedge self-joins a width derived from their OUTPUT row count, since
+    the exploding stage's input bytes under-state its work."""
     spark = df.sparkSession
     n = parts if parts else int(spark.conf.get("spark.sql.shuffle.partitions"))
     with static_loop_planning(spark):

@@ -1,5 +1,9 @@
 """Dedup family + similarity search (driver-mandated LLM-data operators)."""
 
+import hashlib
+import random
+import struct
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -209,13 +213,80 @@ def test_embedding_neardup(spark, vectors):
     assert {(r["id_a"], r["id_b"]) for r in out.collect()} == {(1, 4)}
 
 
-def test_hyperplane_bucket_deterministic(spark, vectors):
-    b1 = {r["vec_id"]: r["b"] for r in vectors.select(
-        "vec_id", similarity.hyperplane_bucket(F.col("embedding"), 4).alias("b")).collect()}
-    b2 = {r["vec_id"]: r["b"] for r in vectors.select(
-        "vec_id", similarity.hyperplane_bucket(F.col("embedding"), 4).alias("b")).collect()}
-    assert b1 == b2
-    assert b1[1] == b1[4]  # identical vectors share buckets
+def _f32(x):
+    return struct.unpack("f", struct.pack("f", x))[0]
+
+
+def _srp_reference(vec, planes):
+    """SRP bucket in pure Python: hashlib md5 coefficients, a sequential
+    double sum, bit p set iff the projection is >= 0 (a NULL projection
+    sets no bit)."""
+    if vec is None or not vec:
+        # sequence(1, 0) is [1, 0]: an empty vector zips to two NULL products
+        return 0
+    bucket = 0
+    for p in range(planes):
+        acc = 0.0
+        for i, v in enumerate(vec, 1):
+            if v is None:
+                acc = None
+                break
+            h = int(hashlib.md5(f"{p}:{i}".encode()).hexdigest()[:8], 16)
+            acc += v * (h / float(0xFFFFFFFF) * 2.0 - 1.0)
+        if acc is not None and acc >= 0:
+            bucket |= 1 << p
+    return bucket
+
+
+def _seeded_vectors(n, dim, seed):
+    rng = random.Random(seed)
+    return [[_f32(rng.uniform(-1, 1)) for _ in range(dim)] for _ in range(n)]
+
+
+def test_hyperplane_bucket_matches_python_reference(spark):
+    # common length 6, one shorter vector, one empty, one with a NULL
+    # element, one NULL vector
+    vecs = _seeded_vectors(16, 6, seed=11)
+    vecs += [vecs[0][:3], [], [vecs[1][0], None, *vecs[1][2:]], None]
+    df = spark.createDataFrame(list(enumerate(vecs)), "vec_id long, embedding array<float>")
+    planes = 5
+    want = {i: _srp_reference(v, planes) for i, v in enumerate(vecs)}
+    assert len(set(want.values())) > 4  # the planes do split the vectors
+    # dim 6: driver-side coefficients for the common length; 3: for the
+    # short row only; 0: per-element md5 coefficients for every row
+    for dim in (6, 3, 0):
+        got = {r["vec_id"]: r["b"] for r in df.select(
+            "vec_id", similarity.hyperplane_bucket(F.col("embedding"), planes, dim).alias("b")
+        ).collect()}
+        assert got == want, dim
+
+
+def test_vector_dim_reads_first_row(spark, vectors):
+    assert similarity.vector_dim(vectors, "embedding") == 4
+    assert similarity.vector_dim(vectors.where(F.col("vec_id") < 0), "embedding") == 0
+
+
+@pytest.mark.parametrize("planes", [0, 3])
+def test_embedding_neardup_matches_three_fold_cosine(spark, planes):
+    base = _seeded_vectors(30, 8, seed=5)
+    rng = random.Random(6)
+    vecs = base + [[_f32(x + rng.uniform(-0.05, 0.05)) for x in v] for v in base[:10]]
+    df = spark.createDataFrame(list(enumerate(vecs)), "vec_id long, embedding array<float>")
+    got = {tuple(r) for r in dedup.embedding_neardup_pairs(
+        df, "vec_id", "embedding", threshold=0.3, bucket_planes=planes).collect()}
+    a = df.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("v_a"))
+    b = df.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("v_b"))
+    scored = a.join(b, F.col("id_a") < F.col("id_b")).select(
+        "id_a", "id_b",
+        F.round(similarity.cosine_similarity(F.col("v_a"), F.col("v_b")), 6).alias("cosine"),
+    )
+    want = {
+        tuple(r) for r in scored.where(F.col("cosine") >= 0.3).collect()
+        if not planes
+        or _srp_reference(vecs[r["id_a"]], planes) == _srp_reference(vecs[r["id_b"]], planes)
+    }
+    assert len(want) > 10
+    assert got == want
 
 
 def test_lsh_topk_identical_vector_recalled(spark, vectors):

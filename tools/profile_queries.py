@@ -2,8 +2,16 @@
 
 For each named registry query: time DF construction (iterative operators
 execute their eager localCheckpoints here) and the noop-sink write
-separately, count jobs, and optionally dump ``explain("formatted")`` to
+separately, count jobs and Janino class compilations (``CodegenMetrics``),
+and optionally dump ``explain("formatted")`` to
 ``plans/r10/<name>_<tag>.txt``.
+
+With ``--repeat N`` each query runs N times back to back. Its first run
+compiles the classes it generates; a repeat that still compiles some
+generates different code on every run (or the session's generated-code
+cache is too small to hold them), which is what the ``compiled=`` column
+of the repeats shows. The first named query also runs once as a warm-up
+before the timed runs; its compilations are printed on the warm-up line.
 
 Usage:
     python tools/profile_queries.py [--plans TAG] [--repeat N] q1 q2 ...
@@ -58,10 +66,13 @@ def main() -> None:
         .agg(F.sum(F.col("r_regionkey").cast("decimal(18,4)")).cast("double").alias("s"))
         .collect()
     )
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    c0 = codegen.getCount()
     warm = qs[args.queries[0]](spark, sf_dir)
     warm.write.format("noop").mode("overwrite").save()
     for dep in getattr(warm, "_sg_persisted", ()):
         dep.unpersist()
+    print(f"warm-up ({args.queries[0]}): compiled={codegen.getCount() - c0}", flush=True)
 
     plans_dir = Path(__file__).resolve().parent.parent / "plans" / "r10"
     if args.plans:
@@ -71,6 +82,7 @@ def main() -> None:
         for rep in range(args.repeat):
             tracker = spark.sparkContext.statusTracker()
             j0 = max(tracker.getJobIdsForGroup(None) or [-1])
+            c0 = codegen.getCount()
             spark.sparkContext.setJobDescription(f"profile:{name}")
             t0 = time.time()
             df = qs[name](spark, sf_dir)
@@ -88,8 +100,9 @@ def main() -> None:
             tracker = spark.sparkContext.statusTracker()
             j1 = max(tracker.getJobIdsForGroup(None) or [-1])
             print(
-                f"{name}: build={t1 - t0:.2f}s write={t2 - t1:.2f}s "
-                f"total={t2 - t0:.2f}s jobs={j1 - j0}",
+                f"{name} run {rep + 1}/{args.repeat}: build={t1 - t0:.2f}s "
+                f"write={t2 - t1:.2f}s total={t2 - t0:.2f}s jobs={j1 - j0} "
+                f"compiled={codegen.getCount() - c0}",
                 flush=True,
             )
 
